@@ -19,7 +19,7 @@ Coverage map (SURVEY.md §2):
   engine-portable md5 hash families, so the ENTIRE LSH pipelines
   (signatures → band buckets → candidate join → verify) are under the
   value-hash gate; the faster xxhash64 families are the bulk defaults
-  (identical algorithm, different hash constants — bench.py).
+  (identical algorithm, different hash constants).
 * Similarity search — exact cosine top-k (oracle via
   ``list_cosine_similarity``); LSH-bucketed ANN oracle-gated via the
   integer-quantized hyperplane family (exact int64 bucket codes in
@@ -933,8 +933,8 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (signature i = min of md5(i||':'||shingle) hex strings) is reproduced
     exactly by the DuckDB twin, so signatures → band keys → bucket self-join
     → exact-Jaccard verify all sit under the value-hash gate.  The faster
-    xxhash64 family stays the bulk default (bench.py) — identical algorithm,
-    different hash constants."""
+    xxhash64 family stays the bulk default — identical algorithm, different
+    hash constants."""
     from parallel_betweenness_centrality_using_bsp_spark.operators.dedup import minhash_dedup_pairs
 
     d = _t(spark, sf_dir, "documents")
@@ -3691,10 +3691,13 @@ def _mis_sql() -> str:
     md5-priority permutation (md5('mis:'||v) || ':' || lpad(v, 12, '0')),
     per round win = smaller than every undecided neighbor, dominate =
     undecided neighbor of a winner — mirrors operators/mis.py::luby_mis
-    round for round."""
+    round for round.  Every CTE of the chain is ``AS MATERIALIZED``: each
+    ``u{k}`` is referenced four times by the next round, so an inlined chain
+    grows exponentially in ``MIS_ROUNDS`` (DuckDB ran out of memory on it
+    at sf0.001)."""
     parts = [
         f"""WITH {_EDGES_SQL},
-u0 AS (SELECT vertex,
+u0 AS MATERIALIZED (SELECT vertex,
               md5('mis:' || vertex::VARCHAR) || ':'
                 || lpad(vertex::VARCHAR, 12, '0') AS prio
        FROM vertices)"""
@@ -3703,17 +3706,17 @@ u0 AS (SELECT vertex,
         p = k - 1
         parts.append(
             f""",
-nm{k} AS (SELECT e.dst AS vertex, min(pr.prio) AS m
+nm{k} AS MATERIALIZED (SELECT e.dst AS vertex, min(pr.prio) AS m
           FROM und e JOIN u{p} pr ON pr.vertex = e.src
           WHERE e.dst IN (SELECT vertex FROM u{p})
           GROUP BY e.dst),
-w{k} AS (SELECT u.vertex FROM u{p} u LEFT JOIN nm{k} ON nm{k}.vertex = u.vertex
+w{k} AS MATERIALIZED (SELECT u.vertex FROM u{p} u LEFT JOIN nm{k} ON nm{k}.vertex = u.vertex
          WHERE nm{k}.m IS NULL OR u.prio < nm{k}.m),
-d{k} AS (SELECT DISTINCT e.dst AS vertex FROM und e
+d{k} AS MATERIALIZED (SELECT DISTINCT e.dst AS vertex FROM und e
          WHERE e.src IN (SELECT vertex FROM w{k})
            AND e.dst IN (SELECT vertex FROM u{p})
            AND e.dst NOT IN (SELECT vertex FROM w{k})),
-u{k} AS (SELECT u.* FROM u{p} u
+u{k} AS MATERIALIZED (SELECT u.* FROM u{p} u
          WHERE u.vertex NOT IN (SELECT vertex FROM w{k})
            AND u.vertex NOT IN (SELECT vertex FROM d{k}))"""
         )

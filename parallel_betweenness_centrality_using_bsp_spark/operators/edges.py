@@ -176,13 +176,6 @@ def degrees(edges: DataFrame, direction: str = "out") -> DataFrame:
     )
 
 
-def partition_edges(edges: DataFrame, num_partitions: int, key: str = "src") -> DataFrame:
-    """Hash-partition the edge table by ``key`` and persist — done ONCE per
-    run so every superstep's frontier join reuses the same layout instead of
-    re-shuffling the (big) edge side each iteration."""
-    return edges.repartition(num_partitions, key).persist()
-
-
 def graph_profile(spark, edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """One-row graph summary — the DESCRIBE-GRAPH a user runs before
     choosing algorithms/partitioning: sizes, density, directed-edge

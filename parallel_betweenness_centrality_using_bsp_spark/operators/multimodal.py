@@ -23,8 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-ASSET_SCHEMA = "asset_id long, media_type string, data binary, width int, height int, duration_ms int"
-
 DECODED_SCHEMA = (
     "asset_id long, media_type string, width int, height int, n_bytes long, sha256 string"
 )

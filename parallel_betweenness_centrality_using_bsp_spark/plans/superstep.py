@@ -114,10 +114,8 @@ def _materialize(
 # whole seconds per superstep by round ~20 of a 2-reference kernel, with
 # logical plan and RDD lineage both perfectly flat.  Single-reference
 # kernels grow ~3 digits/round (linear, harmless), so a high digit
-# threshold distinguishes the two.
-_STATS_DIGIT_CAP = 2000
-# the same cap in bits (digits / log10(2)) — compared via int.bit_length(),
-# which has no conversion limit at any size
+# threshold distinguishes the two: 2000 digits, in bits (2000 / log10(2)) —
+# compared via int.bit_length(), which has no conversion limit at any size
 _STATS_BIT_CAP = 6644
 
 
@@ -149,18 +147,18 @@ def guard_stats(out: DataFrame) -> DataFrame:
     every superstep.  Chain as ``.localCheckpoint(eager=True)
     .transform(guard_stats)`` on any state that re-enters its own next
     round's plan."""
-    try:
-        jqe = out._jdf.queryExecution()
-        if _stats_healthy(lambda: jqe.optimizedPlan().stats().sizeInBytes()):
-            return out
-        fresh = out.sparkSession._jsparkSession.internalCreateDataFrame(
-            jqe.toRdd(), out._jdf.schema(), False
-        )
-        return DataFrame(fresh, out.sparkSession)
-    except Exception:
+    jdf = getattr(out, "_jdf", None)
+    if jdf is None:
         # non-classic sessions (Connect) expose no plan internals; the
         # checkpointed frame itself is always correct
         return out
+    jqe = jdf.queryExecution()
+    if _stats_healthy(lambda: jqe.optimizedPlan().stats().sizeInBytes()):
+        return out
+    fresh = out.sparkSession._jsparkSession.internalCreateDataFrame(
+        jqe.toRdd(), jdf.schema(), False
+    )
+    return DataFrame(fresh, out.sparkSession)
 
 
 def _partition_metrics(df: DataFrame) -> list[tuple[int, int]]:

@@ -14,10 +14,16 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
 
 _spec = importlib.util.spec_from_file_location(
-    "scaling_bench", "/root/repo/scripts/scaling_bench.py"
+    "scaling_bench",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "scaling_bench.py",
+    ),
 )
 sb = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(sb)

@@ -121,3 +121,27 @@ def test_stats_healthy_survives_int_str_conversion_cap():
         raise ValueError("Exceeds the limit (4300 digits) for integer string conversion")
 
     assert not _stats_healthy(boom)
+
+
+def test_guard_stats_raises_plan_failures_and_skips_connect_frames():
+    """A failure while reading or rebuilding the plan stats must surface:
+    swallowing it would return the frame unguarded and let the size
+    estimate compound.  Only a frame with no JVM handle (Spark Connect) is
+    passed through unchanged."""
+    import pytest
+    from py4j.protocol import Py4JError
+
+    from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+
+    class _BrokenJdf:
+        def queryExecution(self):
+            raise Py4JError("queryExecution failed")
+
+    class _ClassicFrame:
+        _jdf = _BrokenJdf()
+
+    with pytest.raises(Py4JError):
+        guard_stats(_ClassicFrame())
+
+    connect_frame = object()
+    assert guard_stats(connect_frame) is connect_frame
