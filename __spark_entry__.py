@@ -2326,7 +2326,7 @@ def graph_hits3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.hits import hits
 
     e = _order_edges(spark, sf_dir)
-    run = hits(spark, e, tol=0.0, max_supersteps=HITS_ITERS, count_rows=False)
+    run = hits(spark, e, tol=0.0, max_supersteps=HITS_ITERS)
     return run.state.select(
         "vertex", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
     ).orderBy("vertex")
@@ -2567,7 +2567,7 @@ def graph_salsa3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.hits import salsa
 
     e = _order_edges(spark, sf_dir)
-    run = salsa(spark, e, tol=0.0, max_supersteps=SALSA_ITERS, count_rows=False)
+    run = salsa(spark, e, tol=0.0, max_supersteps=SALSA_ITERS)
     return run.state.select(
         "vertex", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
     ).orderBy("vertex")

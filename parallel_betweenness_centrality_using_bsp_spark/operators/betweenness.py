@@ -5,12 +5,14 @@ Two interchangeable implementations, cross-checked in tests:
 ``betweenness_bsp``
     The north_star formulation: BSP-superstep multi-source BFS frontier
     expansion + reverse-order dependency accumulation as **iterative
-    DataFrame joins**.  State is keyed by (source, vertex); one BFS level ==
-    one superstep == one Spark job wave (shuffle = the reference's
-    bsp_put/bsp_send message exchange, materialization = bsp_sync).  Scales
-    with the cluster: the edge table is hash-partitioned by src once and
-    persisted; every superstep shuffles only the frontier.  Small frontiers
-    are broadcast to turn the frontier×edges join into a broadcast join.
+    DataFrame joins**.  The forward phase is ``bfs.bfs_levels``, the level
+    loop ``bfs_distances`` shares.  State is keyed by (source, vertex); one
+    BFS level == one superstep == one Spark job wave (shuffle = the
+    reference's bsp_put/bsp_send message exchange, materialization =
+    bsp_sync).  Scales with the cluster: the edge table is hash-partitioned
+    by src once and persisted; every superstep shuffles only the frontier.
+    Small frontiers are broadcast to turn the frontier×edges join into a
+    broadcast join.
 
 ``betweenness_csr``
     The fast path when the graph (not the state) fits per executor: write the
@@ -39,8 +41,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import IncrementalVisited
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_levels
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import prepare_adjacency
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
 
@@ -63,22 +66,6 @@ class BetweennessResult:
 
 def _checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True).transform(guard_stats)
-
-
-def _prep(
-    spark: SparkSession, edges: DataFrame, directed: bool, num_partitions: int | None
-) -> tuple[DataFrame, DataFrame, int]:
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    e = edges.select("src", "dst").dropDuplicates(["src", "dst"]) if directed else symmetrize(edges)
-    e = e.repartition(p, "src").persist()
-    e.count()
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .persist()
-    )
-    return e, vertices, p
 
 
 def _source_batches(vertices: DataFrame, sources, batch_size: int):
@@ -104,9 +91,6 @@ def _source_batches(vertices: DataFrame, sources, batch_size: int):
 # Pure-DataFrame BSP implementation
 # ---------------------------------------------------------------------------
 
-_BROADCAST_FRONTIER_MAX = 500_000  # rows; below this, hint broadcast of the frontier
-
-
 def betweenness_bsp(
     spark: SparkSession,
     edges: DataFrame,
@@ -126,7 +110,13 @@ def betweenness_bsp(
     sample (unbiased for a uniform sample; identical to exact when the
     sample is every vertex)."""
     t0 = time.monotonic()
-    e, vertices, _p = _prep(spark, edges, directed, num_partitions)
+    e = prepare_adjacency(spark, edges, directed, num_partitions)
+    vertices = (
+        e.select(F.col("src").alias("vertex"))
+        .unionByName(e.select(F.col("dst").alias("vertex")))
+        .distinct()
+        .persist()
+    )
     n_sources = 0
 
     bc_acc: DataFrame | None = None
@@ -139,47 +129,17 @@ def betweenness_bsp(
         src_df = spark.createDataFrame([(s,) for s in batch], "source long")
 
         # ---- forward phase: multi-source BFS, one level per superstep ----
-        frontier = _checkpoint(
+        levels = bfs_levels(
             src_df.select(
                 "source",
                 F.col("source").alias("vertex"),
                 F.lit(0).alias("dist"),
                 F.lit(1.0).alias("sigma"),
-            )
+            ),
+            e,
         )
-        levels: list[DataFrame] = [frontier]
-        # Visited set grows one (checkpointed) frontier per superstep and
-        # periodically folds into a single materialized table, so the
-        # anti-join plan stays O(1)-deep at any BFS depth (re-unioning all
-        # levels every superstep was O(depth²) scan volume).
-        visited = IncrementalVisited(frontier, ["source", "vertex"])
-        d = 0
-        while True:
-            d += 1
-            # frontier is always checkpointed → count is a cheap cached scan
-            f = F.broadcast(frontier) if frontier.count() <= _BROADCAST_FRONTIER_MAX else frontier
-            msgs = (
-                f.join(e, f.vertex == e.src)
-                .select("source", e.dst.alias("vertex"), "sigma")
-                .persist()
-            )
-            # counting msgs doubles as their materialization; the anti join
-            # below then reads the cache instead of re-running the big join
-            total_edges_traversed += msgs.count()
-            new_frontier = _checkpoint(
-                msgs.join(visited.df(), ["source", "vertex"], "left_anti")
-                .groupBy("source", "vertex")
-                .agg(F.sum("sigma").alias("sigma"))
-                .withColumn("dist", F.lit(d))
-                .select("source", "vertex", "dist", "sigma")
-            )
-            msgs.unpersist()
-            total_steps += 1
-            if new_frontier.isEmpty():
-                break
-            levels.append(new_frontier)
-            visited.add(new_frontier)
-            frontier = new_frontier
+        # every level was expanded, the final empty one included
+        total_steps += len(levels)
 
         # ---- backward phase: reverse-order dependency accumulation ----
         deltas: dict[int, DataFrame] = {
@@ -220,6 +180,8 @@ def betweenness_bsp(
         for dd in sorted(deltas):
             part = deltas[dd]
             all_state = part if all_state is None else all_state.unionByName(part)
+        # each expanded (source, vertex) row sent one message per out-edge
+        total_edges_traversed += all_state.join(e, all_state.vertex == e.src).count()
 
         batch_bc = (
             all_state.where(F.col("vertex") != F.col("source"))
@@ -414,11 +376,7 @@ def prepare_csr(
     ``spark.range(n)`` — a DataFrame, never a driver-side Python list
     (10^9 vertices would be tens of GB of driver memory as a list).
     """
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        if directed
-        else symmetrize(edges)
-    )
+    e = traversal_edges(edges, directed)
     path = artifact_dir or tempfile.mkdtemp(prefix="spark_csr_")
     e.write.mode("overwrite").parquet(path)
     written = spark.read.parquet(path)
@@ -593,11 +551,7 @@ def edge_betweenness_bsp(
         return_state=True,
     )
     st = res.state
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        if directed
-        else symmetrize(edges)
-    )
+    e = traversal_edges(edges, directed)
     sv = st.select(
         "source",
         F.col("vertex").alias("src"),

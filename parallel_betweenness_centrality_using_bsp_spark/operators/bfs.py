@@ -1,11 +1,13 @@
-"""Multi-source BFS distances — the reference's per-source ``dist[]`` array
-as a standalone operator (SURVEY.md §2 A6/A8/A9 surfaced directly).
+"""Multi-source BFS — the reference's per-source ``dist[]`` array as a
+standalone operator (SURVEY.md §2 A6/A8/A9 surfaced directly), and the one
+BFS level loop in the package.
 
-Same superstep structure as the betweenness forward phase: one BFS level ==
-one superstep; the frontier×edges hash join is the message exchange, the
-per-level materialization is the barrier, small frontiers are broadcast.
-State is keyed by (source, vertex) so a batch of sources advances in the
-same wave of jobs.
+``bfs_levels`` is that loop; ``bfs_distances`` projects its levels to
+distances and ``betweenness.betweenness_bsp`` runs its forward phase on
+them.  One BFS level == one superstep: the frontier×edges hash join is the
+message exchange, the per-level materialization is the barrier, small
+frontiers are broadcast.  State is keyed by (source, vertex) so a batch of
+sources advances in the same wave of jobs.
 """
 
 from __future__ import annotations
@@ -14,10 +16,61 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import IncrementalVisited
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
-_BROADCAST_FRONTIER_MAX = 500_000
+_BROADCAST_FRONTIER_MAX = 500_000  # rows; below this, hint broadcast of the frontier
+
+
+def prepare_adjacency(
+    spark: SparkSession, edges: DataFrame, directed: bool, num_partitions: int | None
+) -> DataFrame:
+    """``traversal_edges`` hash-partitioned by src and persisted: the table
+    every BFS level joins its frontier against."""
+    p = num_partitions or spark.sparkContext.defaultParallelism
+    e = traversal_edges(edges, directed).repartition(p, "src").persist()
+    e.count()
+    return e
+
+
+def bfs_levels(
+    start: DataFrame, e: DataFrame, max_depth: int | None = None
+) -> list[DataFrame]:
+    """Expand the ``(source, vertex, dist, sigma)`` start frontier over the
+    ``prepare_adjacency`` table ``e``, one level per superstep.
+
+    Returns the checkpointed levels: ``levels[d]`` holds the rows first
+    reached at distance d, each with ``sigma`` = the sum of its parents'
+    ``sigma`` (with sigma 1 at the start: Brandes' shortest-path counts).
+    The loop stops at the first empty level, which is not returned, or
+    after ``max_depth`` levels.
+    """
+    frontier = start.localCheckpoint(eager=True).transform(guard_stats)
+    levels = [frontier]
+    # O(1)-deep anti-join target at any depth (vs re-unioning all levels
+    # every superstep = O(depth²) total scans on long-diameter graphs).
+    visited = IncrementalVisited(frontier, ["source", "vertex"])
+    d = 0
+    while max_depth is None or d < max_depth:
+        d += 1
+        # frontier is always checkpointed → count is a cheap cached scan
+        f = F.broadcast(frontier) if frontier.count() <= _BROADCAST_FRONTIER_MAX else frontier
+        new_frontier = (
+            f.join(e, f.vertex == e.src)
+            .select("source", e.dst.alias("vertex"), "sigma")
+            .join(visited.df(), ["source", "vertex"], "left_anti")
+            .groupBy("source", "vertex")
+            .agg(F.sum("sigma").alias("sigma"))
+            .select("source", "vertex", F.lit(d).alias("dist"), "sigma")
+            .localCheckpoint(eager=True).transform(guard_stats)
+        )
+        if new_frontier.isEmpty():
+            break
+        levels.append(new_frontier)
+        visited.add(new_frontier)
+        frontier = new_frontier
+    return levels
 
 
 def bfs_distances(
@@ -31,44 +84,17 @@ def bfs_distances(
 ) -> DataFrame:
     """(source long, vertex long, dist int) for every vertex reachable from
     each source (unreachable vertices are absent)."""
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        if directed
-        else symmetrize(edges)
+    e = prepare_adjacency(spark, edges, directed, num_partitions)
+    start = spark.createDataFrame(
+        [(int(s), int(s), 0, 1.0) for s in sources],
+        "source long, vertex long, dist int, sigma double",
     )
-    e = e.repartition(p, "src").persist()
-    e.count()
-
-    frontier = spark.createDataFrame(
-        [(int(s), int(s), 0) for s in sources], "source long, vertex long, dist int"
-    ).localCheckpoint(eager=True).transform(guard_stats)
-    levels = [frontier]
-    # O(1)-deep anti-join target at any depth (vs re-unioning all levels
-    # every superstep = O(depth²) total scans on long-diameter graphs).
-    visited = IncrementalVisited(frontier, ["source", "vertex"])
-    d = 0
-    while max_depth is None or d < max_depth:
-        d += 1
-        f = F.broadcast(frontier) if frontier.count() <= _BROADCAST_FRONTIER_MAX else frontier
-        msgs = f.join(e, f.vertex == e.src).select("source", e.dst.alias("vertex"))
-        new_frontier = (
-            msgs.join(visited.df(), ["source", "vertex"], "left_anti")
-            .distinct()
-            .withColumn("dist", F.lit(d))
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        if new_frontier.isEmpty():
-            break
-        levels.append(new_frontier)
-        visited.add(new_frontier)
-        frontier = new_frontier
-
+    levels = bfs_levels(start, e, max_depth)
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
     e.unpersist()
-    return out
+    return out.drop("sigma")
 
 
 def double_sweep_diameter(
@@ -190,11 +216,7 @@ def shortest_path(
         return spark.createDataFrame([], "pos int, vertex long")
     plen = int(target[0]["dist"])
 
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        if directed
-        else symmetrize(edges)
-    )
+    e = traversal_edges(edges, directed)
     du = dist.select(F.col("vertex").alias("src"), F.col("dist").alias("du"))
     dv = dist.select(F.col("vertex").alias("dst"), F.col("dist").alias("dv"))
     parents = (
@@ -246,8 +268,6 @@ def ego_network(
     ).select("vertex", "dist")
     e = edges.select("src", "dst")
     if not directed:
-        from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-
         e = symmetrize(edges)
     mv = members.select("vertex")
     induced = e.join(

@@ -38,7 +38,6 @@ def connected_components(
     resume_state: DataFrame | None = None,
     start_step: int = 0,
     algorithm: str = "hashmin",
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """``algorithm="hashmin"`` (default): label diffusion, O(diameter) rounds
@@ -82,7 +81,6 @@ def connected_components(
         num_partitions=num_partitions,
         resume_state=resume_state,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state=bucket_state,
     )
 
@@ -97,14 +95,12 @@ def _hashmin(
     num_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """Returns run whose state is (vertex long, label long).
 
-    ``resume_state``/``start_step`` restart a checkpointed run mid-iteration;
-    ``count_rows=False`` elides the per-superstep row-count job (convergence
-    uses the label-sum scan, not the count).
+    ``resume_state``/``start_step`` restart a checkpointed run mid-iteration
+    (convergence uses the label-sum scan, not a row count).
     """
     p = num_partitions or spark.sparkContext.defaultParallelism
     und = symmetrize(edges).repartition(p, "src").persist()
@@ -153,7 +149,6 @@ def _hashmin(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     und.unpersist()
@@ -338,7 +333,6 @@ def incremental_components(
             dl,
             max_supersteps=max_supersteps,
             num_partitions=min(p, 8),  # |delta|-sized problem
-            count_rows=False,
         )
         .state.where(F.col("vertex") != F.col("label"))
         .select(F.col("vertex").alias("old_label"), F.col("label").alias("new_label"))

@@ -116,7 +116,6 @@ def coreness_run(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=False,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     e.unpersist()

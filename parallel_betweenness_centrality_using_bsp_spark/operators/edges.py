@@ -158,6 +158,14 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def traversal_edges(edges: DataFrame, directed: bool) -> DataFrame:
+    """The (src, dst) pairs a traversal follows: the deduplicated edges when
+    ``directed``, else the symmetrized view."""
+    if directed:
+        return edges.select("src", "dst").dropDuplicates(["src", "dst"])
+    return symmetrize(edges)
+
+
 def degrees(edges: DataFrame, direction: str = "out") -> DataFrame:
     """(vertex, degree). direction: out | in | both (both = degree in the
     symmetrized graph)."""

@@ -39,7 +39,6 @@ def hits(
     run_id: str | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """Returns a run whose state is (vertex long, hub double, auth double)
@@ -127,7 +126,6 @@ def hits(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     e_src.unpersist()
@@ -147,7 +145,6 @@ def salsa(
     run_id: str | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """SALSA (Lempel & Moran 2001, "The stochastic approach for
@@ -244,7 +241,6 @@ def salsa(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     e_src.unpersist()

@@ -39,30 +39,28 @@ def label_propagation(
     num_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     weight_col: str | None = None,
     bucket_state: bool = False,
     salt_buckets: int | None = None,
 ) -> SuperstepRun:
     """Returns run whose state is (vertex long, label long).
 
-    ``resume_state``/``start_step`` restart a checkpointed run mid-iteration.
-    ``count_rows=False`` elides the per-superstep row-count job (pure
-    observability) — worthwhile when supersteps are short.  ``weight_col``
-    runs WEIGHTED LPA: the argmax is over the summed edge weight per
-    neighbor label instead of the neighbor count — weights must be
-    INTEGRAL so the (weight desc, label asc) order stays exact in every
-    engine (the exact-match determinism rule); weights of parallel /
-    both-direction edges between a pair sum.  ``bucket_state=True``
-    (requires ``checkpoint_dir``) buckets each superstep's label table on
-    ``vertex`` so the next round's state×edges join skips the state-side
-    exchange.  ``salt_buckets=B`` switches the per-vertex argmax from a
-    window sort to a TWO-PHASE max (sub-key max over ``label % B``, then a
-    final B-row max per vertex) — same (count desc, label asc) result, but
-    a hub vertex with millions of distinct neighbor labels sorts at most
-    ``ceil(distinct_labels / B)`` rows per task instead of all of them in
-    one window partition (the asof.py two-phase pattern).  Default keeps
-    the window path, which measured faster on balanced graphs.
+    ``resume_state``/``start_step`` restart a checkpointed run
+    mid-iteration.  ``weight_col`` runs WEIGHTED LPA: the argmax is over the
+    summed edge weight per neighbor label instead of the neighbor count —
+    weights must be INTEGRAL so the (weight desc, label asc) order stays
+    exact in every engine (the exact-match determinism rule); weights of
+    parallel / both-direction edges between a pair sum.
+    ``bucket_state=True`` (requires ``checkpoint_dir``) buckets each
+    superstep's label table on ``vertex`` so the next round's state×edges
+    join skips the state-side exchange.  ``salt_buckets=B`` switches the
+    per-vertex argmax from a window sort to a TWO-PHASE max (sub-key max
+    over ``label % B``, then a final B-row max per vertex) — same (count
+    desc, label asc) result, but a hub vertex with millions of distinct
+    neighbor labels sorts at most ``ceil(distinct_labels / B)`` rows per
+    task instead of all of them in one window partition (the asof.py
+    two-phase pattern).  Default keeps the window path, which measured
+    faster on balanced graphs.
     """
     p = num_partitions or spark.sparkContext.defaultParallelism
     if weight_col is not None:
@@ -149,7 +147,6 @@ def label_propagation(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     und.unpersist()

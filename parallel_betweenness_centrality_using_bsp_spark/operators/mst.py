@@ -123,7 +123,7 @@ def boruvka_forest(
             .select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
         )
         merged = connected_components(
-            spark, comp_edges, algorithm="starcontract", count_rows=False
+            spark, comp_edges, algorithm="starcontract"
         ).state  # (vertex=old comp, label=new comp, min member id)
         labels = (
             labels.join(

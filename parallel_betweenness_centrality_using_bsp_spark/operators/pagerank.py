@@ -39,7 +39,6 @@ def pagerank(
     num_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     personalize: list[int] | None = None,
     weight_col: str | None = None,
     bucket_state: bool = False,
@@ -193,7 +192,6 @@ def pagerank(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     edges_w.unpersist()
@@ -253,7 +251,6 @@ def katz(
     num_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """Katz centrality, truncated at ``max_supersteps`` walk lengths:
@@ -310,7 +307,6 @@ def katz(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     edges_p.unpersist()
@@ -328,7 +324,6 @@ def eigenvector_centrality(
     num_partitions: int | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     bucket_state: bool = False,
 ) -> SuperstepRun:
     """Eigenvector centrality by fixed-k power iteration:
@@ -395,7 +390,6 @@ def eigenvector_centrality(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     edges_p.unpersist()

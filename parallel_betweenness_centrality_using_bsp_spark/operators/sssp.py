@@ -77,7 +77,6 @@ def sssp_run(
     run_id: str | None = None,
     resume_state: DataFrame | None = None,
     start_step: int = 0,
-    count_rows: bool = True,
     frontier_sizes: list[int] | None = None,
     bucket_state: bool = False,
     delta_width: int | None = None,
@@ -198,7 +197,6 @@ def sssp_run(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=count_rows,
         bucket_state_by=["source", "vertex"] if bucket_state else None,
     )
     e.unpersist()
@@ -234,7 +232,6 @@ def sssp(
         early_stop=early_stop,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
-        count_rows=False,
         delta_width=delta_width,
     )
     return run.state.select("source", "vertex", "dist")

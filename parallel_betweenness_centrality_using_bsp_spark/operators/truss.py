@@ -109,7 +109,6 @@ def k_truss_run(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=False,
     )
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.functions.hashing import md5_token_value
-from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import (
     SuperstepRun,
     latest_checkpoint,
@@ -57,11 +57,7 @@ def indexed_adjacency(
     buckets), each (src, bucket) numbers its rows locally in parallel, and
     a per-src running sum of bucket sizes supplies the offset.
     """
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        if directed
-        else symmetrize(edges)
-    )
+    e = traversal_edges(edges, directed)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     if salt_buckets is None or salt_buckets <= 1:
         w = Window.partitionBy("src").orderBy("dst")
@@ -169,7 +165,6 @@ def random_walks_run(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=False,
     )
     corpus = run.state
     for fr in seen:
@@ -339,7 +334,6 @@ def node2vec_walks_run(
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
-        count_rows=False,
     )
     corpus = run.state.select("walk_id", "pos", "vertex")
     for fr in seen:

@@ -6,8 +6,12 @@ iteration is the barrier (the reference's ``bsp_sync()`` analogue — see
 SURVEY.md §3.1; the reference checkout is empty so no file:line citations
 are possible, per SURVEY.md §0).
 
-Responsibilities handled once, here, for every iterative algorithm
-(connected components, PageRank, label propagation, betweenness):
+Responsibilities handled once, here, for the iterative kernels that run on
+it: connected components (hash-min and star contraction), label
+propagation, PageRank, Katz, eigenvector centrality, HITS, SALSA, SSSP,
+k-core, coreness, k-truss, WL refinement and random walks (uniform and
+node2vec).  The BFS level loop (``operators.bfs``, shared by BFS and BSP
+Brandes) does not run on it: it keeps every level, not one state.
 
 * **Lineage control** — iterative DataFrame loops grow the logical plan
   without bound; every superstep either writes state to parquet and reads it
@@ -68,10 +72,11 @@ def _materialize(
     algo: str,
     run_id: str,
     step: int,
-    count_rows: bool = True,
     bucket_state_by: list[str] | None = None,
 ) -> tuple[DataFrame, int]:
     """Barrier: force computation, cut lineage, return (state, row_count).
+    Rows are counted only when ``checkpoint_dir`` is set (the write already
+    scans the data, and only then are they recorded); otherwise -1.
 
     With ``bucket_state_by`` (and a checkpoint_dir), state lands as a
     BUCKETED+SORTED parquet table on those columns instead of a plain
@@ -101,8 +106,7 @@ def _materialize(
         df.write.mode("overwrite").parquet(path)
         out = spark.read.parquet(path)
         return out, out.count()
-    out = guard_stats(df.localCheckpoint(eager=True))
-    return out, (out.count() if count_rows else -1)
+    return guard_stats(df.localCheckpoint(eager=True)), -1
 
 
 # Catalyst's simple size estimate (sizeInBytes) multiplies through joins as
@@ -183,7 +187,6 @@ def superstep_loop(
     run_id: str | None = None,
     start_step: int = 0,
     metrics_per_partition: bool = False,
-    count_rows: bool = True,
     bucket_state_by: list[str] | None = None,
 ) -> SuperstepRun:
     """Run ``state <- step_fn(state, k)`` until convergence or max_supersteps.
@@ -191,10 +194,8 @@ def superstep_loop(
     ``converged_fn(old, new) -> bool`` runs after each superstep; both
     arguments are already materialized, so actions on them are cheap scans.
     ``start_step`` > 0 resumes counting from a checkpoint (see
-    ``latest_checkpoint``).  ``count_rows=False`` skips the per-superstep
-    row-count job (rows recorded as -1): the count is one extra Spark job of
-    pure serial floor per superstep, which matters when supersteps are short;
-    checkpointed runs always count (the write already scans the data).
+    ``latest_checkpoint``).  Each superstep's ``rows`` metric is its state
+    row count in checkpointed runs and -1 otherwise.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     if start_step > 0 and checkpoint_dir is not None:
@@ -220,7 +221,6 @@ def superstep_loop(
             algo,
             run_id,
             step,
-            count_rows=count_rows or checkpoint_dir is not None,
             bucket_state_by=bucket_state_by,
         )
         wall_ms = (time.monotonic() - t0) * 1000.0
@@ -301,6 +301,9 @@ def superstep_loop(
     )
 
 
+_FOLD_EVERY = 8  # pending levels IncrementalVisited holds before folding
+
+
 class IncrementalVisited:
     """Incrementally-grown membership set for frontier anti-joins.
 
@@ -308,17 +311,16 @@ class IncrementalVisited:
     so far*.  Re-unioning all L prior levels every superstep costs O(L) plan
     nodes and cached scans per step — O(L²) total, a scale-killer on
     long-diameter graphs (road networks, chains).  This keeps one
-    materialized ``base`` plus at most ``fold_every`` pending level
+    materialized ``base`` plus at most ``_FOLD_EVERY`` pending level
     DataFrames (which the caller has already checkpointed, so appending is
-    free); every ``fold_every`` appends the union folds into a fresh
+    free); every ``_FOLD_EVERY`` appends the union folds into a fresh
     checkpointed base.  Per-superstep plan size and scan count are then
-    O(fold_every) = O(1) regardless of depth, and fold work totals
-    O(L/fold_every) extra materializations.
+    O(_FOLD_EVERY) = O(1) regardless of depth, and fold work totals
+    O(L/_FOLD_EVERY) extra materializations.
     """
 
-    def __init__(self, first: DataFrame, cols: list[str], fold_every: int = 8):
+    def __init__(self, first: DataFrame, cols: list[str]):
         self._cols = cols
-        self._fold_every = fold_every
         self._base = first.select(*cols)
         self._pending: list[DataFrame] = []
 
@@ -332,7 +334,7 @@ class IncrementalVisited:
     def add(self, level: DataFrame) -> None:
         """Append a newly-materialized frontier; fold when due."""
         self._pending.append(level)
-        if len(self._pending) >= self._fold_every:
+        if len(self._pending) >= _FOLD_EVERY:
             self._base = self.df().localCheckpoint(eager=True)
             self._pending = []
 

@@ -213,7 +213,7 @@ def fold_component_batch(spark: SparkSession, batch: DataFrame, state_dir: str) 
         old = spark.read.parquet(labels_dir)
         new = incremental_components(spark, old, batch)
     else:
-        new = connected_components(spark, batch, count_rows=False).state.select(
+        new = connected_components(spark, batch).state.select(
             "vertex", "label"
         )
     new = new.localCheckpoint(eager=True)
@@ -292,13 +292,11 @@ def fold_pagerank_batch(
         run = pagerank_warm_start(
             spark, all_edges, prev,
             alpha=alpha, tol=tol, max_supersteps=max_supersteps,
-            count_rows=False,
         )
     else:
         run = pagerank(
             spark, all_edges,
             alpha=alpha, tol=tol, max_supersteps=max_supersteps,
-            count_rows=False,
         )
     new = run.state.localCheckpoint(eager=True)
     new.write.mode("overwrite").parquet(ranks_dir)

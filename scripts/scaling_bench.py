@@ -80,7 +80,7 @@ g = random_uniform_graph(spark, nv, ne, seed=42, partitions=parts).persist()
 m = g.count()
 
 t0 = time.monotonic()
-run = pagerank(spark, g, tol=0.0, max_supersteps=pr_iters, num_partitions=parts, count_rows=False)
+run = pagerank(spark, g, tol=0.0, max_supersteps=pr_iters, num_partitions=parts)
 pr_sec = time.monotonic() - t0
 
 out = {

@@ -53,6 +53,25 @@ def test_er_graph_bsp(spark):
     assert res.supersteps > 0 and res.edges_traversed > 0
 
 
+def test_bsp_traversal_counters(spark):
+    """supersteps = forward levels (the final empty one included) plus
+    backward levels; edges_traversed = one message per out-edge of every
+    expanded (source, vertex) row."""
+    # two components, eccentricity 4 at most: 5 forward + 4 backward levels;
+    # each of the 8 sources expands every vertex of its component once
+    res = betweenness_bsp(spark, edge_df(spark, path_graph_edges(5) + [(10, 11), (11, 12)]))
+    assert res.supersteps == 9
+    assert res.edges_traversed == 52
+
+    # connected: every source expands every vertex, so both implementations
+    # traverse |sources| x the symmetrized edge count
+    edges = er_graph(n=40, p=0.1, seed=5)
+    sources = [0, 5, 17]
+    bsp = betweenness_bsp(spark, edge_df(spark, edges), sources=sources)
+    csr = betweenness_csr(spark, edge_df(spark, edges), sources=sources)
+    assert bsp.edges_traversed == csr.edges_traversed == len(sources) * 2 * len(edges)
+
+
 def test_er_graph_csr(spark):
     edges = er_graph(n=200, p=0.04, seed=42)
     want = oracle_betweenness(edges)

@@ -11,7 +11,7 @@ def test_hits_star_fixed_point(spark):
     # directed star 0 -> {1..4}: hub mass all on 0, auth uniform on leaves —
     # the exact fixed point from iteration 1 on
     e = edge_df(spark, [(0, v) for v in range(1, 5)])
-    run = hits(spark, e, tol=0.0, max_supersteps=2, count_rows=False)
+    run = hits(spark, e, tol=0.0, max_supersteps=2)
     got = {r["vertex"]: (r["hub"], r["auth"]) for r in run.state.collect()}
     assert np.isclose(got[0][0], 1.0) and np.isclose(got[0][1], 0.0)
     for v in range(1, 5):
@@ -41,8 +41,7 @@ def test_hits_l1_invariant_and_matches_numpy_oracle(spark):
     edges = er_graph(n=60, p=0.08, seed=13)
     directed = [(u, v) for u, v in edges]  # use one orientation only
     iters = 12
-    run = hits(spark, edge_df(spark, directed), tol=0.0, max_supersteps=iters,
-               count_rows=False)
+    run = hits(spark, edge_df(spark, directed), tol=0.0, max_supersteps=iters)
     rows = run.state.collect()
     assert np.isclose(sum(r["hub"] for r in rows), 1.0)
     assert np.isclose(sum(r["auth"] for r in rows), 1.0)
@@ -61,15 +60,14 @@ def test_hits_resume_mid_iteration(spark, tmp_path):
 
     want = {
         (r["vertex"]): (round(r["hub"], 9), round(r["auth"], 9))
-        for r in hits(spark, e, tol=0.0, max_supersteps=4, count_rows=False).state.collect()
+        for r in hits(spark, e, tol=0.0, max_supersteps=4).state.collect()
     }
-    hits(spark, e, tol=0.0, max_supersteps=2, checkpoint_dir=ckpt, run_id="h",
-         count_rows=False)
+    hits(spark, e, tol=0.0, max_supersteps=2, checkpoint_dir=ckpt, run_id="h")
     step, state = latest_checkpoint(spark, ckpt, "hits", "h")
     assert step == 2
     resumed = hits(
         spark, e, tol=0.0, max_supersteps=2, checkpoint_dir=ckpt, run_id="h",
-        resume_state=state, start_step=step, count_rows=False,
+        resume_state=state, start_step=step,
     )
     got = {
         (r["vertex"]): (round(r["hub"], 9), round(r["auth"], 9))
@@ -107,8 +105,7 @@ def test_salsa_matches_numpy_oracle_and_conserves_mass(spark):
     directed = [(i, (i + 1) % n) for i in range(n)] + [
         (i, (i + 7) % n) for i in range(0, n, 3)
     ]
-    run = salsa(spark, edge_df(spark, directed), tol=0.0, max_supersteps=4,
-                count_rows=False)
+    run = salsa(spark, edge_df(spark, directed), tol=0.0, max_supersteps=4)
     got = {r["vertex"]: (r["hub"], r["auth"]) for r in run.state.collect()}
     h, a = _numpy_salsa(directed, 4)
     for v in range(n):
@@ -134,11 +131,9 @@ def test_salsa_resists_tight_knit_community_vs_hits(spark):
 
     # the raw-sum eigenvector needs ~12 iterations to concentrate on the
     # clique at this size (numpy twin: node 100 still leads at iteration 8)
-    run_h = hits(spark, edge_df(spark, directed), tol=0.0, max_supersteps=12,
-                 count_rows=False)
+    run_h = hits(spark, edge_df(spark, directed), tol=0.0, max_supersteps=12)
     auth_h = {r["vertex"]: r["auth"] for r in run_h.state.collect()}
-    run_s = salsa(spark, edge_df(spark, directed), tol=0.0, max_supersteps=6,
-                  count_rows=False)
+    run_s = salsa(spark, edge_df(spark, directed), tol=0.0, max_supersteps=6)
     auth_s = {r["vertex"]: r["auth"] for r in run_s.state.collect()}
     assert max(auth_h, key=auth_h.get) in range(5, 10)  # HITS: clique wins
     assert max(auth_s, key=auth_s.get) == 100        # SALSA: broad support wins

@@ -113,7 +113,7 @@ def test_pagerank_warm_start_converges_faster_same_fixpoint(spark):
 
     base = ba_graph(n=150, m=3, seed=29)
     e0 = edge_df(spark, base)
-    run0 = pagerank(spark, e0, tol=1e-10, count_rows=False)
+    run0 = pagerank(spark, e0, tol=1e-10)
 
     # a crawl delta away from the hubs: two new leaf-to-leaf edges plus a
     # brand-new vertex 200 (touching a hub would perturb ranks globally
@@ -121,8 +121,8 @@ def test_pagerank_warm_start_converges_faster_same_fixpoint(spark):
     # doesn't)
     delta = [(144, 200), (200, 145), (146, 147)]
     e1 = edge_df(spark, base + delta)
-    cold = pagerank(spark, e1, tol=1e-10, count_rows=False)
-    warm = pagerank_warm_start(spark, e1, run0.state, tol=1e-10, count_rows=False)
+    cold = pagerank(spark, e1, tol=1e-10)
+    warm = pagerank_warm_start(spark, e1, run0.state, tol=1e-10)
 
     assert warm.converged and cold.converged
     assert warm.supersteps < cold.supersteps  # the point of warm starting

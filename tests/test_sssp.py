@@ -52,7 +52,7 @@ def test_sssp_long_chain_frontier_stays_sparse(spark):
     sizes: list[int] = []
     run = sssp_run(
         spark, e, [0], max_hops=n + 20, early_stop=True,
-        count_rows=False, frontier_sizes=sizes,
+        frontier_sizes=sizes,
     )
     assert run.converged
     got = {r["vertex"]: r["dist"] for r in run.state.collect()}
@@ -73,14 +73,14 @@ def test_sssp_resume_mid_iteration(spark, tmp_path):
     # crash after 3 rounds, then resume from the newest complete checkpoint
     sssp_run(
         spark, e, [0, 3], max_hops=3, early_stop=False,
-        checkpoint_dir=ckpt, run_id="r", count_rows=False,
+        checkpoint_dir=ckpt, run_id="r",
     )
     step, state = latest_checkpoint(spark, ckpt, "sssp", "r")
     assert step == 3
     resumed = sssp_run(
         spark, e, [0, 3], max_hops=3, early_stop=False,
         checkpoint_dir=ckpt, run_id="r",
-        resume_state=state, start_step=step, count_rows=False,
+        resume_state=state, start_step=step,
     )
     got = {
         (r["source"], r["vertex"]): r["dist"]

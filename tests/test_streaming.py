@@ -473,7 +473,7 @@ def test_stream_component_maintenance_matches_cold(spark, tmp_path):
     got = run_component_maintenance_once(
         spark, src, state, ckpt, max_files_per_trigger=1
     )
-    want = connected_components(spark, edge_df(spark, edges), count_rows=False).state
+    want = connected_components(spark, edge_df(spark, edges)).state
     g = {r["vertex"]: r["label"] for r in got.collect()}
     w = {r["vertex"]: r["label"] for r in want.select("vertex", "label").collect()}
     assert g == w
@@ -497,7 +497,7 @@ def test_streaming_pagerank_maintenance_matches_cold(spark, tmp_path):
         spark, src, state, ckpt, max_files_per_trigger=1, tol=1e-12
     )
     want = pagerank(
-        spark, edge_df(spark, edges), tol=1e-12, max_supersteps=100, count_rows=False
+        spark, edge_df(spark, edges), tol=1e-12, max_supersteps=100
     ).state
     g = {r["vertex"]: r["pr"] for r in got.collect()}
     w = {r["vertex"]: r["pr"] for r in want.collect()}
