@@ -7,12 +7,14 @@ Two interchangeable implementations, cross-checked in tests:
     expansion + reverse-order dependency accumulation as **iterative
     DataFrame joins**.  The forward phase is ``bfs.bfs_levels``, the level
     loop ``bfs_distances`` shares.  State is keyed by (source, vertex); one
-    BFS level == one superstep == one Spark job wave (shuffle = the
+    BFS level == one superstep == one checkpoint job wave (shuffle = the
     reference's bsp_put/bsp_send message exchange, materialization =
-    bsp_sync).  Scales with the cluster: the edge table is hash-partitioned
-    by src once and persisted; every superstep shuffles only the frontier.
-    Small frontiers are broadcast to turn the frontier×edges join into a
-    broadcast join.
+    bsp_sync), and the counts the loop needs are observed on that job, not
+    computed by extra actions.  The backward phase pushes too: each row of
+    level d+1 sends ``(1 + delta) / sigma`` over its in-edges and one
+    combining aggregate keeps what reaches level d.  The edge table is
+    hash-partitioned by src once and persisted; small frontiers are
+    broadcast to turn the frontier×edges join into a broadcast join.
 
 ``betweenness_csr``
     The fast path when the graph (not the state) fits per executor: write the
@@ -41,8 +43,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _BROADCAST_FRONTIER_MAX
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_levels
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import prepare_adjacency
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
@@ -111,26 +115,29 @@ def betweenness_bsp(
     sample is every vertex)."""
     t0 = time.monotonic()
     e = prepare_adjacency(spark, edges, directed, num_partitions)
+    # the backward phase sends along in-edges: the same table when undirected
+    e_in = e
+    if directed:
+        reversed_edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        e_in = prepare_adjacency(spark, reversed_edges, True, num_partitions)
     vertices = (
         e.select(F.col("src").alias("vertex"))
         .unionByName(e.select(F.col("dst").alias("vertex")))
         .distinct()
-        .persist()
     )
-    n_sources = 0
-
-    bc_acc: DataFrame | None = None
+    # every vertex scores, 0.0 unless a batch credits it
+    bc_acc = vertices.select("vertex", F.lit(0.0).alias("bc"))
     state_acc: DataFrame | None = None
+    n_sources = 0
     total_steps = 0
     total_edges_traversed = 0
 
     for batch in _source_batches(vertices, sources, batch_size):
         n_sources += len(batch)
-        src_df = spark.createDataFrame([(s,) for s in batch], "source long")
 
         # ---- forward phase: multi-source BFS, one level per superstep ----
-        levels = bfs_levels(
-            src_df.select(
+        levels, sizes, messages = bfs_levels(
+            source_frame(spark, batch).select(
                 "source",
                 F.col("source").alias("vertex"),
                 F.lit(0).alias("dist"),
@@ -140,78 +147,63 @@ def betweenness_bsp(
         )
         # every level was expanded, the final empty one included
         total_steps += len(levels)
+        total_edges_traversed += messages
 
         # ---- backward phase: reverse-order dependency accumulation ----
-        deltas: dict[int, DataFrame] = {
-            len(levels) - 1: levels[-1].withColumn("delta", F.lit(0.0))
-        }
+        # Level d+1 pushes (1 + delta_w) / sigma_w to its in-neighbours; of
+        # those, only level-d rows are its BFS parents, so keeping the groups
+        # that hold a level-d row gives delta_v = sigma_v * sum (Brandes).
+        deltas = [levels[-1].withColumn("delta", F.lit(0.0))]
         for dd in range(len(levels) - 2, -1, -1):
-            lv = levels[dd]
-            nxt = deltas[dd + 1].select(
+            nxt = deltas[-1]
+            f = F.broadcast(nxt) if sizes[dd + 1] <= _BROADCAST_FRONTIER_MAX else nxt
+            pushed = f.join(e_in, f.vertex == e_in.src).select(
                 "source",
-                F.col("vertex").alias("w"),
-                F.col("sigma").alias("sigma_w"),
-                F.col("delta").alias("delta_w"),
+                e_in.dst.alias("vertex"),
+                ((F.lit(1.0) + f.delta) / f.sigma).alias("_c"),
             )
-            contrib = (
-                lv.join(e, lv.vertex == e.src)
-                .select("source", "vertex", "sigma", e.dst.alias("w"))
-                .join(nxt, ["source", "w"])
-                .groupBy("source", "vertex")
-                .agg(
-                    F.sum(
-                        (F.col("sigma") / F.col("sigma_w")) * (F.lit(1.0) + F.col("delta_w"))
-                    ).alias("delta")
-                )
-            )
-            deltas[dd] = _checkpoint(
-                lv.join(contrib, ["source", "vertex"], "left")
-                .select(
-                    "source",
-                    "vertex",
-                    "dist",
-                    "sigma",
-                    F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta"),
+            deltas.append(
+                _checkpoint(
+                    levels[dd].withColumn("_c", F.lit(0.0))
+                    .unionByName(pushed, allowMissingColumns=True)
+                    .groupBy("source", "vertex")
+                    .agg(
+                        F.max("dist").alias("dist"),
+                        F.max("sigma").alias("sigma"),
+                        F.sum("_c").alias("_c"),
+                    )
+                    .where(F.col("dist").isNotNull())
+                    .select(
+                        "source",
+                        "vertex",
+                        "dist",
+                        "sigma",
+                        (F.col("sigma") * F.col("_c")).alias("delta"),
+                    )
                 )
             )
             total_steps += 1
 
-        all_state = None
-        for dd in sorted(deltas):
-            part = deltas[dd]
-            all_state = part if all_state is None else all_state.unionByName(part)
-        # each expanded (source, vertex) row sent one message per out-edge
-        total_edges_traversed += all_state.join(e, all_state.vertex == e.src).count()
-
-        batch_bc = (
-            all_state.where(F.col("vertex") != F.col("source"))
-            .groupBy("vertex")
-            .agg(F.sum("delta").alias("bc"))
+        all_state = deltas[0]
+        for part in deltas[1:]:
+            all_state = all_state.unionByName(part)
+        batch_bc = all_state.where(F.col("vertex") != F.col("source")).select(
+            "vertex", F.col("delta").alias("bc")
         )
         bc_acc = _checkpoint(
-            batch_bc
-            if bc_acc is None
-            else bc_acc.unionByName(batch_bc).groupBy("vertex").agg(F.sum("bc").alias("bc"))
+            bc_acc.unionByName(batch_bc).groupBy("vertex").agg(F.sum("bc").alias("bc"))
         )
         if return_state:
             state_acc = _checkpoint(
                 all_state if state_acc is None else state_acc.unionByName(all_state)
             )
-        for lv in levels:
-            lv.unpersist()
 
     scale = 1.0 if directed else 0.5
     if estimate:
-        scale *= vertices.count() / max(n_sources, 1)
-    bc = (
-        vertices.join(bc_acc, "vertex", "left")
-        .select(
-            "vertex",
-            (F.coalesce(F.col("bc"), F.lit(0.0)) * F.lit(scale)).alias("bc"),
-        )
-    )
+        scale *= bc_acc.count() / max(n_sources, 1)
+    bc = bc_acc.select("vertex", (F.col("bc") * F.lit(scale)).alias("bc"))
     e.unpersist()
-    vertices.unpersist()
+    e_in.unpersist()
     return BetweennessResult(
         bc=bc,
         supersteps=total_steps,
@@ -425,7 +417,7 @@ def betweenness_csr_sweep(
         src_df = sources.select(F.col(sources.columns[0]).cast("long").alias("source"))
         n_sources = src_df.count()
     else:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "source long")
+        src_df = source_frame(spark, sources)
         n_sources = len(sources)
     # Explicit repartition with a fixed count, NOT groupBy+applyInPandas: the
     # source table is a few KB, so AQE's partition coalescing would merge the

@@ -58,6 +58,7 @@ from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness impor
     BetweennessResult,
     _source_batches,
 )
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
 
@@ -141,7 +142,7 @@ def betweenness_weighted(
     # as the unweighted betweenness_bsp.
     for batch in _source_batches(vertices, sources, batch_size):
         n_sources += len(batch)
-        src_df = spark.createDataFrame([(s,) for s in batch], "source long")
+        src_df = source_frame(spark, batch)
 
         # ---- fused phase: dist + sigma + DAG-depth in ONE fixpoint ------
         # r4 ran dist (hop-diameter rounds) THEN sigma (DAG-depth rounds)
@@ -545,7 +546,7 @@ def betweenness_weighted_csr_sweep(
         src_df = sources.select(F.col(sources.columns[0]).cast("long").alias("source"))
         n_sources = src_df.count()
     else:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "source long")
+        src_df = source_frame(spark, sources)
         n_sources = len(sources)
     # pin the partition count — see betweenness_csr_sweep for why AQE's
     # size-based coalescing must not see this tiny-but-compute-heavy table

@@ -4,17 +4,21 @@ BFS level loop in the package.
 
 ``bfs_levels`` is that loop; ``bfs_distances`` projects its levels to
 distances and ``betweenness.betweenness_bsp`` runs its forward phase on
-them.  One BFS level == one superstep: the frontier×edges hash join is the
-message exchange, the per-level materialization is the barrier, small
-frontiers are broadcast.  State is keyed by (source, vertex) so a batch of
-sources advances in the same wave of jobs.
+them.  One BFS level == one superstep == one checkpoint job wave: the
+frontier×edges hash join is the message exchange, one combining aggregate
+drops the already-visited vertices, and the level's eager checkpoint is the
+barrier.  The counts the loop steers by (messages sent, level rows) are
+``DataFrame.observe`` metrics of that same job, so no level runs a second
+action.  Small frontiers are broadcast.  State is keyed by (source, vertex)
+so a batch of sources advances in the same wave of jobs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import _traversal_pairs
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import IncrementalVisited
@@ -23,54 +27,91 @@ from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guar
 _BROADCAST_FRONTIER_MAX = 500_000  # rows; below this, hint broadcast of the frontier
 
 
+def source_frame(spark: SparkSession, ids) -> DataFrame:
+    """``(source long)``, one row per id of a driver-side list, built from a
+    literal array, so reading it needs no Python worker (a
+    ``createDataFrame`` of the list runs one per read)."""
+    lits = [F.lit(int(s)) for s in ids]
+    return spark.range(1).select(
+        F.explode(F.array(*lits).cast("array<long>")).alias("source")
+    )
+
+
 def prepare_adjacency(
     spark: SparkSession, edges: DataFrame, directed: bool, num_partitions: int | None
 ) -> DataFrame:
     """``traversal_edges`` hash-partitioned by src and persisted: the table
-    every BFS level joins its frontier against."""
+    every BFS level joins its frontier against.  The dedup runs after the
+    src exchange, which already clusters each (src, dst) pair, so the build
+    shuffles once.  The cache fills inside the first job that reads it, so
+    building it costs no action of its own."""
     p = num_partitions or spark.sparkContext.defaultParallelism
-    e = traversal_edges(edges, directed).repartition(p, "src").persist()
-    e.count()
-    return e
+    return (
+        _traversal_pairs(edges, directed)
+        .repartition(p, "src")
+        .dropDuplicates(["src", "dst"])
+        .persist()
+    )
+
+
+def _observed_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count observation, read after its next action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def bfs_levels(
     start: DataFrame, e: DataFrame, max_depth: int | None = None
-) -> list[DataFrame]:
+) -> tuple[list[DataFrame], list[int], int]:
     """Expand the ``(source, vertex, dist, sigma)`` start frontier over the
     ``prepare_adjacency`` table ``e``, one level per superstep.
 
-    Returns the checkpointed levels: ``levels[d]`` holds the rows first
-    reached at distance d, each with ``sigma`` = the sum of its parents'
-    ``sigma`` (with sigma 1 at the start: Brandes' shortest-path counts).
-    The loop stops at the first empty level, which is not returned, or
-    after ``max_depth`` levels.
+    Returns ``(levels, sizes, messages)``.  ``levels[d]`` is the checkpointed
+    set of rows first reached at distance d, each with ``sigma`` = the sum of
+    its parents' ``sigma`` (with sigma 1 at the start: Brandes' shortest-path
+    counts); ``sizes[d]`` is its row count and ``messages`` the number of
+    frontier×edges messages sent.  The loop stops at the first empty level,
+    which is not returned unless it is the start, or after ``max_depth``
+    levels.
+
+    A level is one job wave: the messages and the visited set (as marker
+    rows) meet in one ``groupBy("source", "vertex")`` that sums sigma
+    (combining messages map-side) and keeps the groups without a marker.
+    Both counts are observed on the level's eager checkpoint.
     """
+    start, obs = _observed_rows(start)
     frontier = start.localCheckpoint(eager=True).transform(guard_stats)
     levels = [frontier]
-    # O(1)-deep anti-join target at any depth (vs re-unioning all levels
+    sizes = [obs.get["rows"]]
+    messages = 0
+    # O(1)-deep marker source at any depth (vs re-unioning all levels
     # every superstep = O(depth²) total scans on long-diameter graphs).
     visited = IncrementalVisited(frontier, ["source", "vertex"])
     d = 0
-    while max_depth is None or d < max_depth:
+    while sizes[-1] and (max_depth is None or d < max_depth):
         d += 1
-        # frontier is always checkpointed → count is a cheap cached scan
-        f = F.broadcast(frontier) if frontier.count() <= _BROADCAST_FRONTIER_MAX else frontier
-        new_frontier = (
-            f.join(e, f.vertex == e.src)
-            .select("source", e.dst.alias("vertex"), "sigma")
-            .join(visited.df(), ["source", "vertex"], "left_anti")
-            .groupBy("source", "vertex")
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("source", "vertex", F.lit(d).alias("dist"), "sigma")
-            .localCheckpoint(eager=True).transform(guard_stats)
+        f = F.broadcast(frontier) if sizes[-1] <= _BROADCAST_FRONTIER_MAX else frontier
+        msgs, sent = _observed_rows(
+            f.join(e, f.vertex == e.src).select("source", e.dst.alias("vertex"), "sigma")
         )
-        if new_frontier.isEmpty():
+        marks = visited.df().withColumn("seen", F.lit(True))
+        level, reached = _observed_rows(
+            msgs.unionByName(marks, allowMissingColumns=True)
+            .groupBy("source", "vertex")
+            .agg(F.sum("sigma").alias("sigma"), F.max("seen").alias("seen"))
+            .where(F.col("seen").isNull())
+            .select("source", "vertex", F.lit(d).alias("dist"), "sigma")
+        )
+        level = level.localCheckpoint(eager=True).transform(guard_stats)
+        messages += sent.get["rows"]
+        # no task produced a row: the level is empty
+        if reached.get["rows"] == 0:
             break
-        levels.append(new_frontier)
-        visited.add(new_frontier)
-        frontier = new_frontier
-    return levels
+        levels.append(level)
+        sizes.append(reached.get["rows"])
+        visited.add(level)
+        frontier = level
+    return levels, sizes, messages
 
 
 def bfs_distances(
@@ -85,11 +126,13 @@ def bfs_distances(
     """(source long, vertex long, dist int) for every vertex reachable from
     each source (unreachable vertices are absent)."""
     e = prepare_adjacency(spark, edges, directed, num_partitions)
-    start = spark.createDataFrame(
-        [(int(s), int(s), 0, 1.0) for s in sources],
-        "source long, vertex long, dist int, sigma double",
+    start = source_frame(spark, sources).select(
+        "source",
+        F.col("source").alias("vertex"),
+        F.lit(0).alias("dist"),
+        F.lit(1.0).alias("sigma"),
     )
-    levels = bfs_levels(start, e, max_depth)
+    levels, _, _ = bfs_levels(start, e, max_depth)
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)

@@ -158,12 +158,21 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def _traversal_pairs(edges: DataFrame, directed: bool) -> DataFrame:
+    """``traversal_edges`` before deduplication: the edges when ``directed``,
+    else both directions without self-loops."""
+    e = edges.select("src", "dst")
+    if directed:
+        return e
+    return e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).where(F.col("src") != F.col("dst"))
+
+
 def traversal_edges(edges: DataFrame, directed: bool) -> DataFrame:
     """The (src, dst) pairs a traversal follows: the deduplicated edges when
     ``directed``, else the symmetrized view."""
-    if directed:
-        return edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    return symmetrize(edges)
+    return _traversal_pairs(edges, directed).dropDuplicates(["src", "dst"])
 
 
 def degrees(edges: DataFrame, direction: str = "out") -> DataFrame:

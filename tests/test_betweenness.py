@@ -1,3 +1,5 @@
+import uuid
+
 import numpy as np
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
@@ -62,6 +64,12 @@ def test_bsp_traversal_counters(spark):
     res = betweenness_bsp(spark, edge_df(spark, path_graph_edges(5) + [(10, 11), (11, 12)]))
     assert res.supersteps == 9
     assert res.edges_traversed == 52
+    # directed, the same levels; each edge is sent from its tail only
+    res = betweenness_bsp(
+        spark, edge_df(spark, path_graph_edges(5) + [(10, 11), (11, 12)]), directed=True
+    )
+    assert res.supersteps == 9
+    assert res.edges_traversed == 13
 
     # connected: every source expands every vertex, so both implementations
     # traverse |sources| x the symmetrized edge count
@@ -70,6 +78,45 @@ def test_bsp_traversal_counters(spark):
     bsp = betweenness_bsp(spark, edge_df(spark, edges), sources=sources)
     csr = betweenness_csr(spark, edge_df(spark, edges), sources=sources)
     assert bsp.edges_traversed == csr.edges_traversed == len(sources) * 2 * len(edges)
+
+
+def _jobs_run(spark, action):
+    """(result, number of Spark jobs) of ``action()``, counted through a
+    job group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bsp_bc_comes_back_materialised(spark):
+    """bc is a projection over the last checkpoint: its plan has no
+    Exchange and the first read runs a single job, not a recompute of the
+    edge preparation."""
+    res = betweenness_bsp(spark, edge_df(spark, path_graph_edges(5)))
+    assert "Exchange" not in res.bc._jdf.queryExecution().executedPlan().toString()
+    rows, jobs = _jobs_run(spark, res.bc.collect)
+    assert jobs == 1
+    assert len(rows) == 5
+
+
+def test_bsp_job_budget(spark):
+    """One checkpoint job wave per superstep: all 8 sources of the pinned
+    two-component graph stay within the measured job count (under half
+    of the earlier per-level-count design)."""
+    edges = edge_df(spark, path_graph_edges(5) + [(10, 11), (11, 12)])
+    for directed, budget in ((False, 36), (True, 38)):
+        res, jobs = _jobs_run(
+            spark, lambda: betweenness_bsp(spark, edges, directed=directed)
+        )
+        assert res.supersteps == 9
+        assert jobs <= budget, (directed, jobs)
 
 
 def test_er_graph_csr(spark):

@@ -16,6 +16,8 @@ def test_path_graph_distances(spark):
     }
     assert got[(0, 5)] == 5 and got[(0, 0)] == 0
     assert got[(3, 0)] == 3 and got[(3, 5)] == 2
+    # an empty start frontier is never expanded
+    assert bfs_distances(spark, edge_df(spark, path_graph_edges(6)), []).count() == 0
 
 
 def test_er_graph_matches_networkx(spark):
