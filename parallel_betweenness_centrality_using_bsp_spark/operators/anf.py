@@ -15,8 +15,9 @@ the ``md5_token_value`` hash family (`functions/hashing.py:109`), and the
 gated query hash-matches a DuckDB twin replaying the identical rounds.
 
 State is the long layout (vertex, h): ≤ k rows per vertex, n·k rows total.
-One superstep = one edge join (each vertex inherits its neighbors' sketch
-rows) + distinct + per-vertex keep-k-smallest:
+One ``superstep_loop`` superstep per hop = one edge join (each vertex
+inherits its neighbors' sketch rows) + distinct + per-vertex
+keep-k-smallest:
 
     msgs   = state ⋈ und-edges          (neighbor sketch rows flow along edges)
     merged = state ∪ msgs, DISTINCT     (hash-value set union)
@@ -33,12 +34,14 @@ the set), which is also what makes small-graph tests deterministic.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.functions.hashing import md5_token_value
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 # md5_token_value yields 60-bit non-negative longs
 DOMAIN = float(1 << 60)
@@ -46,6 +49,48 @@ DOMAIN = float(1 << 60)
 
 def _vertex_hash(col) -> F.Column:
     return md5_token_value(F.concat(F.lit("nf:"), F.col(col).cast("string")))
+
+
+def _hop_sketches(
+    spark: SparkSession,
+    edges: DataFrame,
+    hops: int,
+    k: int,
+    num_partitions: int | None,
+) -> list[DataFrame]:
+    """The materialized sketch state after each hop 0..``hops``: one
+    sketch propagation, each hop's state as the loop checkpointed it."""
+    p = num_partitions or spark.sparkContext.defaultParallelism
+    und = symmetrize(edges).repartition(p, "src").persist()
+    w = Window.partitionBy("vertex").orderBy("h")
+    states: list[DataFrame] = []
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        states.append(state)
+        # alias both sides: state's lineage includes und (its vertices do)
+        msgs = (
+            state.alias("st")
+            .join(und.alias("un"), F.col("st.vertex") == F.col("un.src"))
+            .select(F.col("un.dst").alias("vertex"), F.col("st.h").alias("h"))
+        )
+        return (
+            state.unionByName(msgs)
+            .distinct()
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= k)
+            .drop("_rn")
+        )
+
+    verts = und.select(F.col("src").alias("vertex")).distinct()
+    run = superstep_loop(
+        spark,
+        verts.select("vertex", _vertex_hash("vertex").alias("h")),
+        step,
+        algo="anf",
+        max_supersteps=hops,
+    )
+    und.unpersist()
+    return states + [run.state]
 
 
 def anf_sketches(
@@ -58,32 +103,7 @@ def anf_sketches(
     """(vertex, h) bottom-k sketch rows after ``hops`` propagation rounds —
     the k smallest hashes over each vertex's ≤``hops``-ball (own hash
     included, hop 0)."""
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    und = symmetrize(edges).repartition(p, "src").persist()
-    und.count()
-
-    verts = und.select(F.col("src").alias("vertex")).distinct()
-    state = verts.select("vertex", _vertex_hash("vertex").alias("h"))
-
-    w = Window.partitionBy("vertex").orderBy("h")
-    for _ in range(hops):
-        # alias both sides: state's lineage includes und (verts derive from it)
-        msgs = (
-            state.alias("st")
-            .join(und.alias("un"), F.col("st.vertex") == F.col("un.src"))
-            .select(F.col("un.dst").alias("vertex"), F.col("st.h").alias("h"))
-        )
-        state = (
-            state.unionByName(msgs)
-            .distinct()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
-            .transform(guard_stats)
-        )
-    und.unpersist()
-    return state
+    return _hop_sketches(spark, edges, hops, k, num_partitions)[-1]
 
 
 def neighborhood_estimates(sketches: DataFrame, k: int = 32) -> DataFrame:
@@ -112,43 +132,13 @@ def neighborhood_function(
     """(hop, nf_est): estimated Σ_v |ball(v, hop)| for hop = 0..hops — the
     neighborhood function N(h).  Runs ONE sketch propagation and estimates
     after every round (each round's state is already materialized by the
-    superstep's localCheckpoint, so the per-hop aggregates are scan-aggs)."""
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    und = symmetrize(edges).repartition(p, "src").persist()
-    und.count()
-
-    verts = und.select(F.col("src").alias("vertex")).distinct()
-    state = verts.select("vertex", _vertex_hash("vertex").alias("h"))
-    w = Window.partitionBy("vertex").orderBy("h")
-
-    def nf(state_df: DataFrame, hop: int) -> DataFrame:
-        return neighborhood_estimates(state_df, k).agg(
+    superstep's checkpoint, so the per-hop aggregates are scan-aggs)."""
+    return reduce(DataFrame.unionByName, [
+        neighborhood_estimates(state, k).agg(
             F.lit(hop).alias("hop"), F.sum("ball_est").alias("nf_est")
         )
-
-    out = [nf(state, 0)]
-    for i in range(hops):
-        # alias both sides: state's lineage includes und (verts derive from it)
-        msgs = (
-            state.alias("st")
-            .join(und.alias("un"), F.col("st.vertex") == F.col("un.src"))
-            .select(F.col("un.dst").alias("vertex"), F.col("st.h").alias("h"))
-        )
-        state = (
-            state.unionByName(msgs)
-            .distinct()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
-            .transform(guard_stats)
-        )
-        out.append(nf(state, i + 1))
-    und.unpersist()
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+        for hop, state in enumerate(_hop_sketches(spark, edges, hops, k, num_partitions))
+    ])
 
 
 def effective_diameter(
@@ -194,43 +184,12 @@ def harmonic_sketch(
     estimate after; differences inherit the estimator's noise exactly as
     HyperBall's do.  All sketch arithmetic is integer-exact on the md5
     family, so a SQL twin replays it bit-for-bit."""
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    und = symmetrize(edges).repartition(p, "src").persist()
-    und.count()
-
-    verts = und.select(F.col("src").alias("vertex")).distinct()
-    state = verts.select("vertex", _vertex_hash("vertex").alias("h"))
-    w = Window.partitionBy("vertex").orderBy("h")
-
-    balls = [
+    all_balls = reduce(DataFrame.unionByName, [
         neighborhood_estimates(state, k).select(
-            "vertex", F.lit(0).alias("hop"), "ball_est"
+            "vertex", F.lit(hop).alias("hop"), "ball_est"
         )
-    ]
-    for i in range(hops):
-        msgs = (
-            state.alias("st")
-            .join(und.alias("un"), F.col("st.vertex") == F.col("un.src"))
-            .select(F.col("un.dst").alias("vertex"), F.col("st.h").alias("h"))
-        )
-        state = (
-            state.unionByName(msgs)
-            .distinct()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-            .localCheckpoint(eager=True)
-            .transform(guard_stats)
-        )
-        balls.append(
-            neighborhood_estimates(state, k).select(
-                "vertex", F.lit(i + 1).alias("hop"), "ball_est"
-            )
-        )
-    und.unpersist()
-    all_balls = balls[0]
-    for df in balls[1:]:
-        all_balls = all_balls.unionByName(df)
+        for hop, state in enumerate(_hop_sketches(spark, edges, hops, k, num_partitions))
+    ])
     wv = Window.partitionBy("vertex").orderBy("hop")
     return (
         all_balls.withColumn("_prev", F.lag("ball_est").over(wv))

@@ -22,29 +22,29 @@ Synchronous rounds over the undirected graph; all vertices start
    the fixed-round form the oracle gate unrolls; the remainder comes
    back explicitly as ``color = -1``).
 
-Per round: one frontier×edges join + min-agg (the winner election — the
-identical message shape as MIS), one edges×colored join + collect_set
-(the palette lookup, keyed by winner — bounded by the winner set, not the
-graph), one anti join.  State per round is one checkpointed DataFrame;
-nothing is ever driver-side.  Expected O(log n) rounds on bounded-degree
-graphs, same argument as Luby.
+One round is one ``superstep_loop`` superstep over the state
+``(vertex, prio, color, round)`` (color −1 while uncolored): the winner
+election is MIS's own (``mis._local_minima``), then one edges×colored
+join + collect_set (the palette lookup, keyed by winner — bounded by the
+winner set, not the graph) and one join labels the winners' colors into
+the state; the run stops when no vertex is uncolored.  Nothing is ever
+driver-side.  Expected O(log n) rounds on bounded-degree graphs, same
+argument as Luby.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
-
-
-def _priority(vcol) -> "F.Column":
-    return F.concat(
-        F.md5(F.concat(F.lit("col:"), vcol.cast("string"))),
-        F.lit(":"),
-        F.lpad(vcol.cast("string"), 12, "0"),
-    )
+from parallel_betweenness_centrality_using_bsp_spark.operators.mis import (
+    _local_minima,
+    _vertex_priorities,
+)
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
 def _mex(sorted_colors) -> "F.Column":
@@ -70,60 +70,39 @@ def jones_plassmann_coloring(
     vertex using at most Δ+1 colors."""
     p = num_partitions or spark.sparkContext.defaultParallelism
     e = symmetrize(edges).repartition(p, "src").persist()
-    e.count()
+    uncolored = F.col("color") < 0
 
-    und = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .select("vertex", _priority(F.col("vertex")).alias("prio"))
-        .localCheckpoint(eager=True).transform(guard_stats)
-    )
-    colored = spark.createDataFrame([], "vertex long, color int, round int")
-    k = 0
-    while rounds is None or k < rounds:
-        k += 1
-        nbr = und.select(F.col("vertex").alias("src"), F.col("prio").alias("_np"))
-        msgs = (
-            e.join(nbr, "src")
-            .select(F.col("dst").alias("vertex"), "_np")
-            .join(und.select("vertex"), "vertex", "left_semi")
-        )
-        nbr_min = msgs.groupBy("vertex").agg(F.min("_np").alias("_m"))
-        winners = (
-            und.join(nbr_min, "vertex", "left")
-            .where(F.col("_m").isNull() | (F.col("prio") < F.col("_m")))
-            .select("vertex")
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        if winners.isEmpty():
-            break
+    def step(state: DataFrame, k: int) -> DataFrame:
+        won = _local_minima(e, state.where(uncolored))
         palette = (
-            e.join(winners.select(F.col("vertex").alias("src")), "src", "left_semi")
+            e.join(won.select(F.col("vertex").alias("src")), "src", "left_semi")
             .join(
-                colored.select(F.col("vertex").alias("dst"), "color"), "dst"
+                state.where(~uncolored).select(F.col("vertex").alias("dst"), "color"), "dst"
             )
             .groupBy(F.col("src").alias("vertex"))
             .agg(F.array_sort(F.collect_set("color")).alias("_cs"))
         )
-        newly = (
-            winners.join(palette, "vertex", "left")
-            .select(
-                "vertex",
-                _mex(F.col("_cs")).alias("color"),
-                F.lit(k).alias("round"),
-            )
-            .localCheckpoint(eager=True).transform(guard_stats)
+        newly = won.join(palette, "vertex", "left").select(
+            "vertex", _mex(F.col("_cs")).alias("_c")
         )
-        colored = colored.unionByName(newly).localCheckpoint(eager=True).transform(guard_stats)
-        und = und.join(newly, "vertex", "left_anti").localCheckpoint(eager=True).transform(guard_stats)
-        if und.isEmpty():
-            break
+        return state.join(newly, "vertex", "left").select(
+            "vertex",
+            "prio",
+            F.coalesce("_c", "color").alias("color"),
+            F.when(F.col("_c").isNotNull(), k).otherwise(F.col("round")).alias("round"),
+        )
 
-    out = colored.unionByName(
-        und.select(
-            "vertex", F.lit(-1).alias("color"), F.lit(-1).alias("round")
-        )
+    run = superstep_loop(
+        spark,
+        _vertex_priorities(e, "col:").select(
+            "vertex", "prio", F.lit(-1).alias("color"), F.lit(-1).alias("round")
+        ),
+        step,
+        algo="jones_plassmann_coloring",
+        # each round colors the smallest uncolored priority, so the
+        # convergence test always ends an uncapped run
+        max_supersteps=sys.maxsize if rounds is None else rounds,
+        converged_fn=lambda _old, new: new.where(uncolored).isEmpty(),
     )
     e.unpersist()
-    return out
+    return run.state.select("vertex", "color", "round")

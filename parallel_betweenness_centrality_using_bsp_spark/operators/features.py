@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats, superstep_loop
 
 
 def deterministic_sample(
@@ -290,14 +290,11 @@ def k_hop_feature_means(
     """Iterated neighbor aggregation (GNN message passing): hop i averages
     the in-neighbors' hop-(i-1) means — nested means, the GraphSAGE layer
     stack, NOT a flat mean over the k-hop ball.  Same long layout and plan
-    shape per hop; state is checkpointed between hops so plan depth stays
-    O(1)."""
-    state = neighbor_feature_means(
-        edges, features, id_col=id_col, vec_col=vec_col, dims=dims
-    )
-    for _ in range(hops - 1):
-        state = state.localCheckpoint(eager=True).transform(guard_stats)
-        state = (
+    shape per hop; hops 2.. are ``superstep_loop`` supersteps, so plan
+    depth stays O(1)."""
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
+        return (
             edges.select("src", "dst")
             .join(
                 state.select(
@@ -308,7 +305,14 @@ def k_hop_feature_means(
             .groupBy(F.col("dst").alias("vertex"), "pos")
             .agg(F.avg("val").alias("nbr_mean"))
         )
-    return state
+
+    return superstep_loop(
+        edges.sparkSession,
+        neighbor_feature_means(edges, features, id_col=id_col, vec_col=vec_col, dims=dims),
+        step,
+        algo="k_hop_feature_means",
+        max_supersteps=hops - 1,
+    ).state
 
 
 def unigram_surprisal(

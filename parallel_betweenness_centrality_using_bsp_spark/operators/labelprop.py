@@ -176,7 +176,8 @@ def louvain_one_level(
     (ties → smaller community label) — exact long arithmetic, no float, so
     the assignment is bit-identical in every engine, the same
     exact-determinism rule weighted LPA follows.  Eligibility alternates by
-    vertex parity (round r moves only v with v % 2 == r % 2): simultaneous
+    vertex parity (round r = 1, 2, … moves only v with
+    v % 2 == (r − 1) % 2): simultaneous
     moves of adjacent vertices can swap communities and lose quality —
     parity alternation is the standard distributed-Louvain mitigation and
     keeps the fixed-round output deterministic for the oracle twin.
@@ -211,14 +212,8 @@ def louvain_one_level(
         wexpr = F.count(F.lit(1))
     deg = und.groupBy(F.col("src").alias("vertex")).agg(wexpr.alias("degv"))
     m2_row = und.agg(wexpr.alias("m2"))  # 2m (weighted: Σw), in-plan broadcast
-    state = (
-        labels.select("vertex", "label")
-        if labels is not None
-        else deg.select("vertex", F.col("vertex").alias("label"))
-    )
-    state = state.localCheckpoint(eager=True).transform(guard_stats)
 
-    for r in range(rounds):
+    def step(state: DataFrame, r: int) -> DataFrame:
         stot = (
             state.join(deg, "vertex")
             .groupBy("label")
@@ -263,20 +258,26 @@ def louvain_one_level(
         )
         pick = F.struct(F.col("score").alias("_s"), (-F.col("cand")).alias("_nl"))
         best = (
-            scored.where(F.col("vertex") % 2 == F.lit(r % 2))
+            scored.where(F.col("vertex") % 2 == F.lit((r - 1) % 2))
             .groupBy("vertex")
             .agg(F.max(pick).alias("_m"))
             .select("vertex", (-F.col("_m._nl")).alias("new_label"))
         )
-        state = (
-            state.join(best, "vertex", "left")
-            .select(
-                "vertex", F.coalesce("new_label", F.col("label")).alias("label")
-            )
-            .localCheckpoint(eager=True).transform(guard_stats)
+        return state.join(best, "vertex", "left").select(
+            "vertex", F.coalesce("new_label", F.col("label")).alias("label")
         )
+
+    run = superstep_loop(
+        spark,
+        labels.select("vertex", "label")
+        if labels is not None
+        else deg.select("vertex", F.col("vertex").alias("label")),
+        step,
+        algo="louvain_one_level",
+        max_supersteps=rounds,
+    )
     und.unpersist()
-    return state
+    return run.state
 
 
 def modularity(spark: SparkSession, edges: DataFrame, labels: DataFrame,

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 log = logging.getLogger(__name__)
 
@@ -178,11 +179,9 @@ def simrank(
     aggregate.  Like the link-prediction self-join above, a degree-d hub
     fans into d² first-iteration pairs: at web scale sparsify or hub-cap
     the edge table first (the gated query runs the sparsified order graph).
-    State is checkpointed per iteration (superstep discipline — the score
-    table re-enters its own next-round plan).
+    One iteration is one ``superstep_loop`` superstep (the score table
+    re-enters its own next-round plan).
     """
-    from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
-
     p = num_partitions or spark.sparkContext.defaultParallelism
     ein = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("a"))
@@ -191,7 +190,6 @@ def simrank(
         .repartition(p, "u")
         .persist()
     )
-    ein.count()
     verts = (
         ein.select(F.col("u").alias("vertex"))
         .unionByName(ein.select(F.col("a").alias("vertex")))
@@ -206,8 +204,8 @@ def simrank(
     diag = verts.select(
         F.col("vertex").alias("u"), F.col("vertex").alias("v"), F.lit(1.0).alias("s")
     )
-    s = diag.localCheckpoint(eager=True).transform(guard_stats)
-    for _ in range(iters):
+
+    def step(s: DataFrame, _k: int) -> DataFrame:
         raw = (
             s.join(ein, "u")
             .join(
@@ -226,8 +224,10 @@ def simrank(
                 (F.lit(c) * F.col("m") / (F.col("_ia") * F.col("_ib"))).alias("s"),
             )
         )
-        s = diag.unionByName(off).localCheckpoint(eager=True).transform(guard_stats)
+        return diag.unionByName(off)
+
+    run = superstep_loop(spark, diag, step, algo="simrank", max_supersteps=iters)
     ein.unpersist()
     ind.unpersist()
     verts.unpersist()
-    return s
+    return run.state

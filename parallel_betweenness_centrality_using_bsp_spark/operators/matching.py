@@ -19,20 +19,30 @@ endpoints free (an edge is taken by sequential greedy iff it is a local
 minimum after its priority-smaller neighbors are decided — induction on
 priority order), which the pytest recomputes in plain python.
 
-Per round: one unpivot (edge → two (vertex, prio) rows), one min
-aggregation, one join back, two anti joins — hash ops on the live edge
-set, nothing driver-side; expected O(log m) rounds under a random
+One round is one ``superstep_loop`` superstep over the state
+``(src, dst, prio, round)``: matched edges with their round plus the live
+edges (round −1).  The winners come off the vertex table: one unpivot of
+the live edges (edge → two (vertex, prio) rows) and a per-vertex
+``min(prio)``; since priorities are unique, an edge is locally minimal
+iff its prio is the minimum at exactly 2 vertices, and a vertex is
+matched iff its minimum is such a prio.  Two joins with that vertex table
+then label the live edges: won, dropped (touching a newly matched
+endpoint) or still live.  Hash ops on the live edge set, nothing
+driver-side; the run
+stops when no edge is live.  Expected O(log m) rounds under a random
 permutation, and the ``rounds`` cap plus the ``live`` leftover make
 partial progress explicit, never silent.
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
 def _edge_priority(src, dst) -> "F.Column":
@@ -59,50 +69,59 @@ def greedy_matching(
     edges as round −1 rows.  ``rounds=None`` iterates to the fixpoint
     (a true MAXIMAL matching: no live edge has both endpoints free)."""
     p = num_partitions or spark.sparkContext.defaultParallelism
-    live = (
+    is_live = F.col("round") == -1
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        live = state.where(is_live)
+        vmin = (
+            live.select(F.col("src").alias("vertex"), "prio")
+            .unionByName(live.select(F.col("dst").alias("vertex"), "prio"))
+            .groupBy("vertex")
+            .agg(F.min("prio").alias("_m"))
+        )
+        # _won: the vertex's min-prio edge is locally minimal, so the
+        # vertex is matched this round
+        vt = vmin.join(
+            vmin.groupBy("_m").count().where(F.col("count") == 2).select(
+                "_m", F.lit(True).alias("_won")
+            ),
+            "_m",
+            "left",
+        )
+        won = (F.col("prio") == F.col("_ms")) & (F.col("prio") == F.col("_md"))
+        labelled = (
+            live.join(
+                vt.select(F.col("vertex").alias("src"), F.col("_m").alias("_ms"),
+                          F.col("_won").alias("_ws")),
+                "src",
+            )
+            .join(
+                vt.select(F.col("vertex").alias("dst"), F.col("_m").alias("_md"),
+                          F.col("_won").alias("_wd")),
+                "dst",
+            )
+            .where(won | (F.col("_ws").isNull() & F.col("_wd").isNull()))
+            .select("src", "dst", "prio", F.when(won, k).otherwise(-1).alias("round"))
+        )
+        return state.where(~is_live).unionByName(labelled)
+
+    run = superstep_loop(
+        spark,
         symmetrize(edges)
         .where(F.col("src") < F.col("dst"))
         .distinct()
         .repartition(p, "src")
         .select(
-            "src", "dst", _edge_priority(F.col("src"), F.col("dst")).alias("prio")
-        )
-        .localCheckpoint(eager=True).transform(guard_stats)
+            "src",
+            "dst",
+            _edge_priority(F.col("src"), F.col("dst")).alias("prio"),
+            F.lit(-1).alias("round"),
+        ),
+        step,
+        algo="greedy_matching",
+        # each round matches the smallest live priority, so the
+        # convergence test always ends an uncapped run
+        max_supersteps=sys.maxsize if rounds is None else rounds,
+        converged_fn=lambda _old, new: new.where(is_live).isEmpty(),
     )
-
-    matched: list[DataFrame] = []
-    k = 0
-    while (rounds is None or k < rounds) and not live.isEmpty():
-        k += 1
-        ends = live.select(F.col("src").alias("vertex"), "prio").unionByName(
-            live.select(F.col("dst").alias("vertex"), "prio")
-        )
-        vmin = ends.groupBy("vertex").agg(F.min("prio").alias("_m"))
-        winners = (
-            live.join(vmin.withColumnRenamed("vertex", "src"), "src")
-            .where(F.col("prio") == F.col("_m"))
-            .drop("_m")
-            .join(vmin.withColumnRenamed("vertex", "dst"), "dst")
-            .where(F.col("prio") == F.col("_m"))
-            .select("src", "dst")
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        if winners.isEmpty():
-            break
-        matched.append(
-            winners.select("src", "dst", F.lit(k).alias("round"))
-        )
-        gone = winners.select(F.col("src").alias("vertex")).unionByName(
-            winners.select(F.col("dst").alias("vertex"))
-        )
-        live = (
-            live.join(gone.withColumnRenamed("vertex", "src"), "src", "left_anti")
-            .join(gone.withColumnRenamed("vertex", "dst"), "dst", "left_anti")
-            .select("src", "dst", "prio")
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-
-    out = live.select("src", "dst", F.lit(-1).alias("round"))
-    for m in matched:
-        out = out.unionByName(m)
-    return out
+    return run.state.select("src", "dst", "round")

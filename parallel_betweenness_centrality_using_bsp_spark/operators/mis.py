@@ -18,29 +18,61 @@ Synchronous rounds over the undirected graph; all vertices start
 4. Repeat until no vertex is undecided (or ``rounds`` is exhausted —
    the fixed-round form the oracle gate unrolls).
 
-Per round: one frontier×edges hash join (the message exchange), one
-min-aggregation, one anti join — the BSP superstep shape shared with
-BFS/components; per-round state is one checkpointed DataFrame, nothing
-driver-side.  A fixed priority permutation gives expected O(log n) rounds
-on bounded-degree graphs (per-round, each undecided vertex that is a
-local minimum leaves with its neighborhood); the ``rounds`` cap plus the
-returned ``undecided`` rows make partial progress explicit, never silent.
+One round is one ``superstep_loop`` superstep over the state
+``(vertex, prio, status, round)``: an undecided×edges hash join plus a
+min-aggregation elects the winners (``_local_minima``, shared with
+Jones-Plassmann coloring), one winners×edges join finds the dominated
+vertices, and both are labelled into the state; the run stops when no
+vertex is undecided.  Nothing is driver-side.  A fixed priority
+permutation gives expected O(log n) rounds on bounded-degree graphs
+(per-round, each undecided vertex that is a local minimum leaves with its
+neighborhood); the ``rounds`` cap plus the returned ``undecided`` rows
+make partial progress explicit, never silent.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
-def _priority(vcol) -> "F.Column":
+def _priority(vcol, salt: str) -> "F.Column":
+    """``md5(salt || v) || ':' || lpad(v, 12)``: a fixed random permutation
+    of the vertices, unique per vertex and compared as a string."""
     return F.concat(
-        F.md5(F.concat(F.lit("mis:"), vcol.cast("string"))),
+        F.md5(F.concat(F.lit(salt), vcol.cast("string"))),
         F.lit(":"),
         F.lpad(vcol.cast("string"), 12, "0"),
+    )
+
+
+def _vertex_priorities(e: DataFrame, salt: str) -> DataFrame:
+    """(vertex, prio) for every endpoint of the symmetrized edges ``e``."""
+    return (
+        e.select(F.col("src").alias("vertex"))
+        .unionByName(e.select(F.col("dst").alias("vertex")))
+        .distinct()
+        .select("vertex", _priority(F.col("vertex"), salt).alias("prio"))
+    )
+
+
+def _local_minima(e: DataFrame, und: DataFrame) -> DataFrame:
+    """(vertex) of the undecided vertices ``und`` (vertex, prio) whose prio
+    is below every undecided neighbour's over the symmetrized edges ``e``."""
+    nbr_min = (
+        e.join(und.select(F.col("vertex").alias("src"), F.col("prio").alias("_np")), "src")
+        .groupBy(F.col("dst").alias("vertex"))
+        .agg(F.min("_np").alias("_m"))
+    )
+    return (
+        und.join(nbr_min, "vertex", "left")
+        .where(F.col("_m").isNull() | (F.col("prio") < F.col("_m")))
+        .select("vertex")
     )
 
 
@@ -58,60 +90,37 @@ def luby_mis(
     independent AND maximal)."""
     p = num_partitions or spark.sparkContext.defaultParallelism
     e = symmetrize(edges).repartition(p, "src").persist()
-    e.count()
+    undecided = F.col("status") == "undecided"
 
-    und = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .select("vertex", _priority(F.col("vertex")).alias("prio"))
-        .localCheckpoint(eager=True).transform(guard_stats)
-    )
-    decided: list[DataFrame] = []
-    k = 0
-    while rounds is None or k < rounds:
-        k += 1
-        # neighbor priorities, restricted to still-undecided endpoints
-        nbr = und.select(F.col("vertex").alias("src"), F.col("prio").alias("_np"))
-        msgs = (
-            e.join(nbr, "src")
-            .select(F.col("dst").alias("vertex"), "_np")
-            .join(und.select("vertex"), "vertex", "left_semi")
-        )
-        nbr_min = msgs.groupBy("vertex").agg(F.min("_np").alias("_m"))
-        winners = (
-            und.join(nbr_min, "vertex", "left")
-            .where(F.col("_m").isNull() | (F.col("prio") < F.col("_m")))
-            .select("vertex")
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        if winners.isEmpty():
-            break
+    def step(state: DataFrame, k: int) -> DataFrame:
+        won = _local_minima(e, state.where(undecided)).withColumn("_won", F.lit(True))
         dominated = (
-            e.join(winners.withColumnRenamed("vertex", "src"), "src")
-            .select(F.col("dst").alias("vertex"))
+            e.join(won.select(F.col("vertex").alias("src")), "src")
+            .select(F.col("dst").alias("vertex"), F.lit(True).alias("_dom"))
             .distinct()
-            .join(und.select("vertex"), "vertex", "left_semi")
-            .join(winners, "vertex", "left_anti")
-            .localCheckpoint(eager=True).transform(guard_stats)
         )
-        decided.append(
-            winners.select("vertex", F.lit("in").alias("status"), F.lit(k).alias("round"))
+        lost = F.col("_dom") & undecided
+        return state.join(won, "vertex", "left").join(dominated, "vertex", "left").select(
+            "vertex",
+            "prio",
+            F.when(F.col("_won"), F.lit("in"))
+            .when(lost, F.lit("out"))
+            .otherwise(F.col("status"))
+            .alias("status"),
+            F.when(F.col("_won") | lost, k).otherwise(F.col("round")).alias("round"),
         )
-        decided.append(
-            dominated.select(
-                "vertex", F.lit("out").alias("status"), F.lit(k).alias("round")
-            )
-        )
-        gone = winners.unionByName(dominated)
-        und = und.join(gone, "vertex", "left_anti").localCheckpoint(eager=True).transform(guard_stats)
-        if und.isEmpty():
-            break
 
-    out = und.select(
-        "vertex", F.lit("undecided").alias("status"), F.lit(-1).alias("round")
+    run = superstep_loop(
+        spark,
+        _vertex_priorities(e, "mis:").select(
+            "vertex", "prio", F.lit("undecided").alias("status"), F.lit(-1).alias("round")
+        ),
+        step,
+        algo="luby_mis",
+        # each round decides the smallest undecided priority, so the
+        # convergence test always ends an uncapped run
+        max_supersteps=sys.maxsize if rounds is None else rounds,
+        converged_fn=lambda _old, new: new.where(undecided).isEmpty(),
     )
-    for d in decided:
-        out = out.unionByName(d)
     e.unpersist()
-    return out
+    return run.state.select("vertex", "status", "round")

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats, superstep_loop
 
 
 def strongly_connected_components(
@@ -199,29 +199,30 @@ def dag_longest_path_layers(
         .unionByName(e.select(F.col("dst").alias("vertex")))
         .distinct()
     )
-    layer = verts.select("vertex", F.lit(0).alias("layer")).localCheckpoint(eager=True).transform(guard_stats)
-    frontier = layer
-    for _ in range(max_rounds):
+
+    def step(state: DataFrame, _k: int) -> DataFrame:
         msgs = (
-            frontier.join(e, frontier.vertex == e.src)
-            .select(e.dst.alias("vertex"), (F.col("layer") + 1).alias("cand"))
-            .groupBy("vertex")
-            .agg(F.max("cand").alias("cand"))
+            state.where("_chg")
+            .join(e, F.col("vertex") == e.src)
+            .groupBy(e.dst.alias("vertex"))
+            .agg(F.max(F.col("layer") + 1).alias("cand"))
         )
-        la, m = layer.alias("l"), msgs.alias("m")
-        merged = (
-            la.join(m, "vertex", "left")
-            .select(
-                "vertex",
-                F.greatest(F.col("l.layer"), F.col("m.cand")).alias("layer"),
-                (F.col("m.cand") > F.col("l.layer")).alias("_chg"),
-            )
-            .localCheckpoint(eager=True).transform(guard_stats)
+        return state.join(msgs, "vertex", "left").select(
+            "vertex",
+            F.greatest("layer", "cand").alias("layer"),
+            F.coalesce(F.col("cand") > F.col("layer"), F.lit(False)).alias("_chg"),
         )
-        frontier = merged.where(F.col("_chg")).select("vertex", "layer")
-        layer = merged.select("vertex", "layer")
-        if frontier.isEmpty():
-            return layer
+
+    run = superstep_loop(
+        spark,
+        verts.select("vertex", F.lit(0).alias("layer"), F.lit(True).alias("_chg")),
+        step,
+        algo="dag_longest_path_layers",
+        max_supersteps=max_rounds,
+        converged_fn=lambda _old, new: new.where("_chg").isEmpty(),
+    )
+    if run.converged:
+        return run.state.select("vertex", "layer")
     raise ValueError(
         f"dag_longest_path_layers did not converge in {max_rounds} rounds — "
         "is the input really acyclic? (condense() cyclic graphs first)"

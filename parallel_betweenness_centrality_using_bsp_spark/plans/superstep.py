@@ -8,10 +8,14 @@ are possible, per SURVEY.md §0).
 
 Responsibilities handled once, here, for the iterative kernels that run on
 it: connected components (hash-min and star contraction), label
-propagation, PageRank, Katz, eigenvector centrality, HITS, SALSA, SSSP,
-k-core, coreness, k-truss, WL refinement and random walks (uniform and
-node2vec).  The BFS level loop (``operators.bfs``, shared by BFS and BSP
-Brandes) does not run on it: it keeps every level, not one state.
+propagation, one-level Louvain, PageRank, Katz, eigenvector centrality,
+HITS, SALSA, SimRank, SSSP, k-core, coreness, k-truss, WL refinement,
+random walks (uniform and node2vec), k-hop feature means, Luby MIS,
+Jones-Plassmann coloring, greedy matching, ANF sketches and DAG
+longest-path layers.  Not on it: the BFS level loop (``operators.bfs``,
+shared by BFS and BSP Brandes) and BSP Brandes' backward phase, which
+keep every level rather than one state; weighted Brandes; Boruvka MST,
+whose rounds each run a CC; SCC, whose loops nest; and k-means.
 
 * **Lineage control** — iterative DataFrame loops grow the logical plan
   without bound; every superstep either writes state to parquet and reads it
@@ -20,10 +24,10 @@ Brandes) does not run on it: it keeps every level, not one state.
 * **Resumability** — with ``checkpoint_dir`` set, state lands at
   ``{dir}/{algo}/{run_id}/superstep={k}/`` and ``latest_checkpoint`` finds
   the newest complete superstep so a crashed run restarts mid-iteration.
-* **Metrics + lineage rows** — per superstep (optionally per partition) a
-  metrics row ``(run_id, algo, superstep, partition_id, rows, wall_ms)`` is
-  appended to ``{dir}/_metrics`` (parquet), satisfying the north_rule's
-  "per-partition lineage + metrics" requirement.
+* **Metrics + lineage rows** — per superstep a metrics row
+  ``(run_id, algo, superstep, partition_id, rows, wall_ms)`` (``partition_id``
+  is -1: the row covers the whole state) plus its lineage JSON is appended
+  to ``{dir}/_metrics`` (parquet).
 
 At 100 TB the parquet checkpoint is the only viable option — localCheckpoint
 pins executor memory/disk and is lost on executor failure; the parquet state
@@ -165,16 +169,6 @@ def guard_stats(out: DataFrame) -> DataFrame:
     return DataFrame(fresh, out.sparkSession)
 
 
-def _partition_metrics(df: DataFrame) -> list[tuple[int, int]]:
-    """(partition_id, rows) per non-empty partition of the materialized state."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    return [(r["partition_id"], r["rows"]) for r in rows]
-
-
 def superstep_loop(
     spark: SparkSession,
     initial_state: DataFrame,
@@ -186,7 +180,6 @@ def superstep_loop(
     checkpoint_dir: str | None = None,
     run_id: str | None = None,
     start_step: int = 0,
-    metrics_per_partition: bool = False,
     bucket_state_by: list[str] | None = None,
 ) -> SuperstepRun:
     """Run ``state <- step_fn(state, k)`` until convergence or max_supersteps.
@@ -234,20 +227,12 @@ def superstep_loop(
         }
         metrics.append(step_metrics)
         if checkpoint_dir is not None:
-            part_rows = (
-                _partition_metrics(new_state) if metrics_per_partition else [(-1, n_rows)]
-            )
             mdf = spark.createDataFrame(
-                [
-                    (run_id, algo, step, pid, int(rows), float(wall_ms))
-                    for pid, rows in part_rows
-                ],
+                [(run_id, algo, step, -1, int(n_rows), float(wall_ms))],
                 "run_id string, algo string, superstep int, partition_id int, "
                 "rows long, wall_ms double",
             )
-            # lineage payload serialized IN-PLAN (to_json over a struct), so
-            # the same expression works for arbitrarily many partition rows
-            # without driver-side string building
+            # lineage payload serialized in-plan (to_json over a struct)
             parent = (
                 F.lit(_state_path(checkpoint_dir, algo, run_id, step - 1))
                 if step > start_step

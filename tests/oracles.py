@@ -3,6 +3,8 @@ SURVEY.md §5, FIXTURES.md §B4)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import networkx as nx
 import numpy as np
 
@@ -126,6 +128,63 @@ def oracle_brandes_state(edges, source: int, directed=False):
             if dist.get(v, -1) == dist[w] - 1:
                 delta[v] += sigma[v] / sigma[w] * (1.0 + delta[w])
     return dist, sigma, delta
+
+
+def md5_priority(salt: str, v: int) -> str:
+    """The symmetry-breaking priority of MIS and coloring, compared as a
+    string: ``md5(salt || v)`` hex, then ``v`` zero-padded to 12 digits."""
+    return hashlib.md5(f"{salt}{v}".encode()).hexdigest() + ":" + str(v).zfill(12)
+
+
+def _adjacency(edges) -> dict[int, set[int]]:
+    adj: dict[int, set[int]] = {}
+    for u, v in edges:
+        if u != v:
+            adj.setdefault(u, set()).add(v)
+            adj.setdefault(v, set()).add(u)
+    return adj
+
+
+def _local_minima(adj, undecided: set[int], prio: dict[int, str]) -> set[int]:
+    return {
+        v for v in undecided
+        if all(prio[v] < prio[u] for u in adj[v] if u in undecided)
+    }
+
+
+def luby_mis_replay(edges) -> dict[int, tuple[str, int]]:
+    """{vertex: (status, round)} of Luby MIS replayed round by round: each
+    round the undecided local minima of the ``mis:`` priority join (``in``)
+    and their undecided neighbours leave (``out``)."""
+    adj = _adjacency(edges)
+    prio = {v: md5_priority("mis:", v) for v in adj}
+    undecided, out, k = set(adj), {}, 0
+    while undecided:
+        k += 1
+        won = _local_minima(adj, undecided, prio)
+        for v in won:
+            out[v] = ("in", k)
+            for u in (adj[v] & undecided) - won:
+                out[u] = ("out", k)
+        undecided -= set(out)
+    return out
+
+
+def jones_plassmann_replay(edges) -> dict[int, tuple[int, int]]:
+    """{vertex: (color, round)} of Jones-Plassmann coloring replayed round by
+    round: each round the uncolored local minima of the ``col:`` priority
+    take the smallest color no neighbour colored in an earlier round has."""
+    adj = _adjacency(edges)
+    prio = {v: md5_priority("col:", v) for v in adj}
+    undecided, out, k = set(adj), {}, 0
+    while undecided:
+        k += 1
+        won = _local_minima(adj, undecided, prio)
+        for v in won:
+            used = {out[u][0] for u in adj[v] if u in out}
+            out[v] = (min(set(range(len(used) + 1)) - used), k)
+        undecided -= won
+    return out
 
 
 def df_to_dict(df, k, v):

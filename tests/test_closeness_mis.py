@@ -5,7 +5,7 @@ from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import closen
 from parallel_betweenness_centrality_using_bsp_spark.operators.mis import luby_mis
 from parallel_betweenness_centrality_using_bsp_spark.sources.graphs import edge_df
 
-from tests.oracles import er_graph
+from tests.oracles import ba_graph, er_graph, luby_mis_replay
 
 
 def test_closeness_full_sources_matches_networkx(spark):
@@ -107,3 +107,11 @@ def test_luby_mis_path_deterministic(spark):
     b = sorted(map(tuple, luby_mis(spark, e).collect()))
     assert a == b
     _mis_assert_valid(edges, luby_mis(spark, e).collect(), expect_complete=True)
+
+
+def test_luby_mis_fixpoint_matches_round_replay(spark):
+    # every vertex's status AND round equal the pure-python replay's
+    for edges in (er_graph(150, 0.06, seed=3), ba_graph(200, 3, seed=3)):
+        rows = luby_mis(spark, edge_df(spark, edges)).collect()
+        got = {r["vertex"]: (r["status"], r["round"]) for r in rows}
+        assert got == luby_mis_replay(edges)

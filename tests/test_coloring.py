@@ -3,7 +3,7 @@ from collections import defaultdict
 from parallel_betweenness_centrality_using_bsp_spark.operators.coloring import (
     jones_plassmann_coloring,
 )
-from tests.oracles import ba_graph, er_graph
+from tests.oracles import ba_graph, er_graph, jones_plassmann_replay
 
 
 def _run(spark, edges, **kw):
@@ -29,6 +29,12 @@ def test_proper_coloring_at_fixpoint(spark):
         assert all(c >= 0 for c, _ in res.values())
         assert all(res[u][0] != res[v][0] for u, v in edges)
         assert len({c for c, _ in res.values()}) <= max(deg.values()) + 1
+
+
+def test_fixpoint_matches_round_replay(spark):
+    """Every vertex's color AND round equal the pure-python replay's."""
+    for edges in (er_graph(150, 0.06, seed=3), ba_graph(200, 3, seed=3)):
+        assert _run(spark, edges) == jones_plassmann_replay(edges)
 
 
 def test_deterministic_across_runs(spark):

@@ -1,0 +1,74 @@
+"""Every iterative kernel runs on ``plans/superstep.py::superstep_loop``.
+
+A round loop of its own shows in the source as a ``for`` or ``while`` whose
+body materializes state: it calls ``localCheckpoint``, ``checkpoint`` or
+betweenness' ``_checkpoint``.  The scan finds every such loop in
+``operators/`` and names the top-level function that holds it.
+
+``HAND_ROLLED`` names the functions that keep their own loop today: the BFS
+level loop and BSP Brandes' backward phase keep every level rather than one
+state, Boruvka runs a CC inside each round, SCC nests its loops, and k-means
+is off the graph path.  The list may only shrink.
+"""
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OPERATORS = os.path.join(ROOT, "parallel_betweenness_centrality_using_bsp_spark", "operators")
+MATERIALIZE = {"localCheckpoint", "checkpoint", "_checkpoint"}
+
+HAND_ROLLED = {
+    "bfs.bfs_levels",
+    "betweenness.betweenness_bsp",
+    "betweenness_weighted.betweenness_weighted",
+    "mst.boruvka_forest",
+    "scc.strongly_connected_components",
+    "similarity.kmeans_rounds",
+}
+
+
+def _called_name(call: ast.Call) -> str | None:
+    if isinstance(call.func, ast.Attribute):
+        return call.func.attr
+    if isinstance(call.func, ast.Name):
+        return call.func.id
+    return None
+
+
+def _materializes(loop: ast.For | ast.While) -> bool:
+    return any(
+        isinstance(node, ast.Call) and _called_name(node) in MATERIALIZE
+        for stmt in loop.body + loop.orelse
+        for node in ast.walk(stmt)
+    )
+
+
+def _hand_rolled_loops() -> set[str]:
+    found = set()
+    for fname in sorted(os.listdir(OPERATORS)):
+        if not fname.endswith(".py"):
+            continue
+        path = os.path.join(OPERATORS, fname)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for top in tree.body:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if any(
+                isinstance(node, (ast.For, ast.While)) and _materializes(node)
+                for node in ast.walk(top)
+            ):
+                found.add(f"{fname[: -len('.py')]}.{top.name}")
+    return found
+
+
+def test_no_new_hand_rolled_round_loops():
+    new = _hand_rolled_loops() - HAND_ROLLED
+    assert new == set(), f"run these on superstep_loop: {sorted(new)}"
+
+
+def test_hand_rolled_list_names_only_remaining_loops():
+    gone = HAND_ROLLED - _hand_rolled_loops()
+    assert gone == set(), f"no loop of their own now, drop from HAND_ROLLED: {sorted(gone)}"
