@@ -102,7 +102,8 @@ def jones_plassmann_coloring(
         # each round colors the smallest uncolored priority, so the
         # convergence test always ends an uncapped run
         max_supersteps=sys.maxsize if rounds is None else rounds,
-        converged_fn=lambda _old, new: new.where(uncolored).isEmpty(),
+        converge_on=F.count_if(uncolored),
+        converged_fn=lambda _prev, left: left == 0,
     )
     e.unpersist()
     return run.state.select("vertex", "color", "round")

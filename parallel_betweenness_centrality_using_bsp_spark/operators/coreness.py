@@ -36,9 +36,9 @@ One superstep, all JVM-side hash ops:
    value.
 
 Convergence: each coordinate is non-increasing, so ``Σ c`` strictly
-decreases until the fixpoint — one cheap aggregate per round on the
-already-materialized state detects it.  ``fixed_rounds`` runs an exact
-round count instead (the oracle-matched mode: after R rounds both engines
+decreases until the fixpoint — an aggregate observed on each round's
+barrier job detects it, with no job of its own.  ``fixed_rounds`` runs an
+exact round count instead (the oracle-matched mode: after R rounds both engines
 hold the identical R-times-iterated vector whether or not it converged).
 
 Runs under ``plans.superstep.superstep_loop`` (state = (vertex, c)), so
@@ -99,20 +99,16 @@ def coreness_run(
             .agg(F.max(F.least(F.col("c"), F.col("ge"))).alias("c"))
         )
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        # coordinate-wise non-increasing => Σc strictly decreases until the
-        # fixpoint; both frames are materialized, so these are cheap scans
-        return (
-            new.agg(F.sum("c")).first()[0] == old.agg(F.sum("c")).first()[0]
-        )
-
     run = superstep_loop(
         spark,
         resume_state if resume_state is not None else initial,
         step,
         algo="coreness",
         max_supersteps=fixed_rounds if fixed_rounds is not None else max_rounds,
-        converged_fn=None if fixed_rounds is not None else converged,
+        # coordinate-wise non-increasing => Σc strictly decreases until the
+        # fixpoint
+        converge_on=None if fixed_rounds is not None else F.sum("c"),
+        converged_fn=None if fixed_rounds is not None else lambda prev, n: prev == n,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,

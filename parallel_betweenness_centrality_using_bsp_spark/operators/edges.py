@@ -17,7 +17,7 @@ hash joins on the densified key — AQE picks the strategy).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # `import org<r>.proj<r>.mod_<f>` — multiline, one capture per import line.
@@ -51,12 +51,12 @@ def densify_vertices(df: DataFrame, key_cols: list[str], id_col: str = "vertex")
 
       1. range-repartition distinct keys (global sort order across
          partitions), rank within each partition,
-      2. collect only the P per-partition counts to the driver, compute
-         prefix offsets, add them back via a broadcast join.
+      2. observe the P per-partition counts on the job that materializes
+         the ranged keys, compute prefix offsets on the driver, and add
+         them back from a literal array indexed by partition id.
 
     Order (and therefore the ids) depends only on the key values.
     """
-    spark = df.sparkSession
     keys = [F.col(c) for c in key_cols]
     # Materialize the distinct BEFORE repartitionByRange: range partitioning
     # launches a separate SAMPLING job during planning, and without this the
@@ -70,40 +70,33 @@ def densify_vertices(df: DataFrame, key_cols: list[str], id_col: str = "vertex")
     # you'd persist(MEMORY_AND_DISK) on a cluster.
     distinct = df.select(*key_cols).distinct().localCheckpoint(eager=True)
     n_part = max(distinct.rdd.getNumPartitions(), 1)
-    # Materialize the range-partitioned dictionary ONCE: the counts pass and
-    # the final ranking pass are separate actions, so without this the
-    # distinct + range-sample + range-shuffle lineage runs twice and — worse —
-    # the counts pass pays the per-partition SORT it doesn't need (counts are
-    # order-free).  Measured on a 1.6M-key dictionary this lifts 1→4-core
-    # scaling of the whole derive_edges pipeline from 0.39 to 0.54–0.67
-    # (the join stages alone measure 0.80; the residual is the
-    # materialization/shuffle WRITE path, which a single box's shared disk
-    # caps — the same ceiling the bucketed-state measurement hits — while a
-    # real cluster adds disk bandwidth with every node).  At cluster scale
-    # this materialization is what you'd persist(MEMORY_AND_DISK) — one
-    # dictionary-sized write instead of two dictionary-sized shuffles.
+    # Materialize the range-partitioned dictionary ONCE, so the ranking pass
+    # does not rerun the distinct + range-sample + range-shuffle lineage.
+    # Measured on a 1.6M-key dictionary, materializing it lifted 1→4-core
+    # scaling of the whole derive_edges pipeline from 0.39 to 0.54–0.67 (the
+    # join stages alone measure 0.80; the residual is the materialization /
+    # shuffle WRITE path, which a single box's shared disk caps).  At
+    # cluster scale this is what you'd persist(MEMORY_AND_DISK).  The
+    # per-partition counts the offsets need are observed on that same job
+    # (P comparisons per key, one counter per range partition): no counts
+    # pass, no collect and no offsets table.
+    obs = Observation()
     ranged = (
         distinct.repartitionByRange(n_part, *keys)
         .withColumn("_pid", F.spark_partition_id())
+        .observe(
+            obs,
+            *[F.count_if(F.col("_pid") == i).alias(str(i)) for i in range(n_part)],
+        )
         .localCheckpoint(eager=True)
     )
-    local = ranged.withColumn(
-        "_lrank",
-        F.row_number().over(Window.partitionBy("_pid").orderBy(*keys)) - 1,
-    )
-    counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt")).collect()
-    offsets, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["_cnt"]
-    offsets_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
-    return (
-        local.join(F.broadcast(offsets_df), "_pid")
-        .withColumn(id_col, (F.col("_lrank") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lrank", "_off")
-    )
+    counts = obs.get
+    offsets = [0]
+    for i in range(n_part - 1):
+        offsets.append(offsets[-1] + counts[str(i)])
+    lrank = F.row_number().over(Window.partitionBy("_pid").orderBy(*keys)) - 1
+    off = F.array(*[F.lit(o) for o in offsets]).cast("array<long>")[F.col("_pid")]
+    return ranged.select(*key_cols, (lrank + off).alias(id_col))
 
 
 def derive_edges(repo_files: DataFrame) -> tuple[DataFrame, DataFrame]:

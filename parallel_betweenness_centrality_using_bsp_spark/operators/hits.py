@@ -17,7 +17,9 @@ Scale notes:
     iteration shuffles only the two n-vertex score vectors, never the
     m-edge table.
   * runs under ``plans.superstep.superstep_loop``: parquet checkpoints,
-    mid-iteration resume, per-superstep lineage + metrics.
+    mid-iteration resume, per-superstep lineage + metrics.  With ``tol > 0``
+    each step also emits the per-vertex L1 change ``_diff``, whose sum is
+    observed on the barrier job: convergence costs no join and no job.
 """
 
 from __future__ import annotations
@@ -26,6 +28,32 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import SuperstepRun, superstep_loop
+
+
+def _start_state(
+    resume_state: DataFrame | None, vertices: DataFrame, n: int, tol: float
+) -> DataFrame:
+    """The loop's first state: ``resume_state`` or uniform 1/n scores, with
+    an empty ``_diff`` when ``tol > 0``, since the loop observes the
+    convergence aggregate on the initial barrier too."""
+    start = resume_state if resume_state is not None else vertices.select(
+        "vertex", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
+    )
+    if tol <= 0:
+        return start
+    return start.select("vertex", "hub", "auth", F.lit(None).cast("double").alias("_diff"))
+
+
+def _with_diff(new: DataFrame, old: DataFrame) -> DataFrame:
+    """``new`` plus ``_diff`` = |Δhub| + |Δauth| against ``old``, per vertex:
+    the L1 convergence delta, summed on the superstep's barrier job."""
+    o = old.select("vertex", F.col("hub").alias("_oh"), F.col("auth").alias("_oa"))
+    return new.join(o, "vertex").select(
+        "vertex",
+        "hub",
+        "auth",
+        (F.abs(F.col("hub") - F.col("_oh")) + F.abs(F.col("auth") - F.col("_oa"))).alias("_diff"),
+    )
 
 
 def hits(
@@ -65,9 +93,7 @@ def hits(
     )
     n = vertices.count()
 
-    initial = vertices.select(
-        "vertex", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-    )
+    start = _start_state(resume_state, vertices, n, tol)
 
     def step(state: DataFrame, _k: int) -> DataFrame:
         # aliases per join: e_src/e_dst/vertices share the same lineage, so
@@ -93,7 +119,7 @@ def hits(
             .agg(F.sum("auth").alias("rh"))
         )
         s_hub = raw_hub.agg(F.sum("rh").alias("_sh"))
-        return (
+        new = (
             vertices.join(auth, "vertex")
             .join(raw_hub, "vertex", "left")
             .join(F.broadcast(s_hub))
@@ -103,26 +129,17 @@ def hits(
                 "auth",
             )
         )
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        row = (
-            new.alias("a")
-            .join(old.alias("b"), "vertex")
-            .agg(
-                F.sum(F.abs(F.col("a.hub") - F.col("b.hub"))).alias("dh"),
-                F.sum(F.abs(F.col("a.auth") - F.col("b.auth"))).alias("da"),
-            )
-            .first()
-        )
-        return float(row["dh"]) + float(row["da"]) < tol
+        return _with_diff(new, state) if tol > 0 else new
 
     run = superstep_loop(
         spark,
-        resume_state if resume_state is not None else initial,
+        start,
         step,
         algo="hits",
         max_supersteps=max_supersteps,
-        converged_fn=converged if tol > 0 else None,
+        # tol<=0: no _diff column and no convergence test
+        converge_on=F.sum("_diff") if tol > 0 else None,
+        converged_fn=(lambda _prev, l1: l1 < tol) if tol > 0 else None,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
@@ -131,6 +148,7 @@ def hits(
     e_src.unpersist()
     e_dst.unpersist()
     vertices.unpersist()
+    run.state = run.state.drop("_diff")
     return run
 
 
@@ -190,9 +208,7 @@ def salsa(
     )
     n = vertices.count()
 
-    initial = vertices.select(
-        "vertex", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-    )
+    start = _start_state(resume_state, vertices, n, tol)
 
     def step(state: DataFrame, _k: int) -> DataFrame:
         es, ed = e_src.alias("_es"), e_dst.alias("_ed")
@@ -209,7 +225,7 @@ def salsa(
             .groupBy(F.col("_ed.src").alias("vertex"))
             .agg(F.sum(F.col("auth") / F.col("_ed.id_")).alias("rh"))
         )
-        return (
+        new = (
             vertices.join(auth, "vertex")
             .join(raw_hub, "vertex", "left")
             .select(
@@ -218,26 +234,17 @@ def salsa(
                 "auth",
             )
         )
-
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        row = (
-            new.alias("a")
-            .join(old.alias("b"), "vertex")
-            .agg(
-                F.sum(F.abs(F.col("a.hub") - F.col("b.hub"))).alias("dh"),
-                F.sum(F.abs(F.col("a.auth") - F.col("b.auth"))).alias("da"),
-            )
-            .first()
-        )
-        return float(row["dh"]) + float(row["da"]) < tol
+        return _with_diff(new, state) if tol > 0 else new
 
     run = superstep_loop(
         spark,
-        resume_state if resume_state is not None else initial,
+        start,
         step,
         algo="salsa",
         max_supersteps=max_supersteps,
-        converged_fn=converged if tol > 0 else None,
+        # tol<=0: no _diff column and no convergence test
+        converge_on=F.sum("_diff") if tol > 0 else None,
+        converged_fn=(lambda _prev, l1: l1 < tol) if tol > 0 else None,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
@@ -246,4 +253,5 @@ def salsa(
     e_src.unpersist()
     e_dst.unpersist()
     vertices.unpersist()
+    run.state = run.state.drop("_diff")
     return run

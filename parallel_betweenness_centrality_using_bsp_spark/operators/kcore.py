@@ -7,10 +7,11 @@ scrape-loop link tangles survive in high cores, long-tail pages don't).
 One superstep = one peel round: degree aggregation over the surviving
 induced edge set, then two semi-joins re-inducing it — all map-side-combined
 hash operations on the edge table's own partitioning.  The survivor count is
-strictly decreasing until the fixpoint, so one cheap count per round detects
-convergence; ``fixed_rounds`` runs an exact round count instead (the
-oracle-matched mode: after R rounds both engines hold the identical
-R-times-peeled subgraph whether or not it has converged).
+strictly decreasing until the fixpoint, so the count observed on each
+round's barrier job detects convergence; ``fixed_rounds`` runs an exact
+round count instead (the oracle-matched mode: after R rounds both engines
+hold the identical R-times-peeled subgraph whether or not it has
+converged).
 
 The loop runs under ``plans.superstep.superstep_loop`` (state = the current
 induced edge set), so with ``checkpoint_dir`` set every peel round lands as
@@ -57,18 +58,15 @@ def k_core_run(
             keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        # survivor count is strictly decreasing until the fixpoint; both
-        # frames are materialized, so the counts are cheap scans
-        return new.count() == old.count()
-
     return superstep_loop(
         spark,
         resume_state if resume_state is not None else initial,
         step,
         algo="kcore",
         max_supersteps=fixed_rounds if fixed_rounds is not None else max_rounds,
-        converged_fn=None if fixed_rounds is not None else converged,
+        # the survivor count strictly decreases until the fixpoint
+        converge_on=None if fixed_rounds is not None else F.count(F.lit(1)),
+        converged_fn=None if fixed_rounds is not None else lambda prev, n: prev == n,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,

@@ -14,9 +14,10 @@ via window row_number — the window partitions by vertex so it rides the same
 hash partitioning; measured faster than struct-max/max_by aggregation, which
 Spark plans as double SortAggregate.
 
-Synchronous LPA can 2-cycle on bipartite structures; the loop detects a
-repeat of the previous state (label-multiset fingerprint) and stops at
-``max_supersteps`` regardless.
+Convergence: each step marks the vertices whose label changed (``_chg``),
+and the loop stops on a superstep that changed none, a count observed on
+its barrier job.  Synchronous LPA can 2-cycle on bipartite structures, so
+it stops at ``max_supersteps`` regardless.
 """
 
 from __future__ import annotations
@@ -78,7 +79,11 @@ def label_propagation(
     else:
         und = symmetrize(edges).repartition(p, "src").persist()
     vertices = und.select(F.col("src").alias("vertex")).distinct()
-    initial = vertices.withColumn("label", F.col("vertex"))
+    start = resume_state if resume_state is not None else vertices.select(
+        "vertex", F.col("vertex").alias("label")
+    )
+    # the change count is observed on the initial barrier too
+    start = start.select("vertex", "label", F.lit(True).alias("_chg"))
 
     def step(state: DataFrame, _k: int) -> DataFrame:
         cols = ["label"] if weight_col is None else ["label", "_w"]
@@ -119,37 +124,32 @@ def label_propagation(
                 .select("vertex", "label")
             )
         # isolated vertices (none here since vertices come from edges) keep label
+        new_label = F.coalesce(F.col("label"), F.col("old_label"))
         return (
             state.select("vertex", F.col("label").alias("old_label"))
             .join(best, "vertex", "left")
             .select(
-                "vertex", F.coalesce(F.col("label"), F.col("old_label")).alias("label")
+                "vertex",
+                new_label.alias("label"),
+                (new_label != F.col("old_label")).alias("_chg"),
             )
         )
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        changed = (
-            new.alias("a")
-            .join(old.alias("b"), "vertex")
-            .where(F.col("a.label") != F.col("b.label"))
-            .limit(1)
-            .count()
-        )
-        return changed == 0
-
     run = superstep_loop(
         spark,
-        resume_state if resume_state is not None else initial,
+        start,
         step,
         algo="label_propagation",
         max_supersteps=max_supersteps,
-        converged_fn=converged,
+        converge_on=F.count_if("_chg"),
+        converged_fn=lambda _prev, changed: changed == 0,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,
         bucket_state_by=["vertex"] if bucket_state else None,
     )
     und.unpersist()
+    run.state = run.state.drop("_chg")
     return run
 
 

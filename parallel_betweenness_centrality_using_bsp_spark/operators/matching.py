@@ -122,6 +122,7 @@ def greedy_matching(
         # each round matches the smallest live priority, so the
         # convergence test always ends an uncapped run
         max_supersteps=sys.maxsize if rounds is None else rounds,
-        converged_fn=lambda _old, new: new.where(is_live).isEmpty(),
+        converge_on=F.count_if(is_live),
+        converged_fn=lambda _prev, left: left == 0,
     )
     return run.state.select("src", "dst", "round")

@@ -120,7 +120,8 @@ def luby_mis(
         # each round decides the smallest undecided priority, so the
         # convergence test always ends an uncapped run
         max_supersteps=sys.maxsize if rounds is None else rounds,
-        converged_fn=lambda _old, new: new.where(undecided).isEmpty(),
+        converge_on=F.count_if(undecided),
+        converged_fn=lambda _prev, left: left == 0,
     )
     e.unpersist()
     return run.state.select("vertex", "status", "round")

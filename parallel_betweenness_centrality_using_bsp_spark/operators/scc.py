@@ -219,7 +219,8 @@ def dag_longest_path_layers(
         step,
         algo="dag_longest_path_layers",
         max_supersteps=max_rounds,
-        converged_fn=lambda _old, new: new.where("_chg").isEmpty(),
+        converge_on=F.count_if("_chg"),
+        converged_fn=lambda _prev, left: left == 0,
     )
     if run.converged:
         return run.state.select("vertex", "layer")

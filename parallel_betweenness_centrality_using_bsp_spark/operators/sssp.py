@@ -184,16 +184,14 @@ def sssp_run(
             improved_out.alias("improved"),
         )
 
-    def converged(_old: DataFrame, new: DataFrame) -> bool:
-        return new.where(F.col("improved")).isEmpty()
-
     run = superstep_loop(
         spark,
         resume_state if resume_state is not None else initial,
         step,
         algo="sssp" if delta_width is None else "sssp_delta",
         max_supersteps=max_hops,
-        converged_fn=converged if early_stop else None,
+        converge_on=F.count_if("improved") if early_stop else None,
+        converged_fn=(lambda _prev, left: left == 0) if early_stop else None,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,

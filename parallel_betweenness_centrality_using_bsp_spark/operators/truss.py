@@ -9,10 +9,10 @@ One superstep = one peel round over the surviving SYMMETRIZED edge set:
     keep (u,v) iff support ≥ k−2      (an edge in no wedge has support 0)
 
 The wedge join is the triangle plan restricted to surviving edges; the
-surviving-edge count is strictly decreasing until the fixpoint, so one
-cheap count per round detects convergence, and ``fixed_rounds`` runs an
-exact round count (the oracle-matched mode — after R rounds both engines
-hold the identical R-times-peeled edge set).  Runs under
+surviving-edge count is strictly decreasing until the fixpoint, so the
+count observed on each round's barrier job detects convergence, and
+``fixed_rounds`` runs an exact round count (the oracle-matched mode —
+after R rounds both engines hold the identical R-times-peeled edge set).  Runs under
 ``plans.superstep.superstep_loop``: parquet checkpoints, mid-peel resume,
 lineage + metrics.
 
@@ -93,9 +93,6 @@ def k_truss_run(
         # of cur that survive — edges in NO wedge are absent (support 0)
         return sup
 
-    def converged(old: DataFrame, new: DataFrame) -> bool:
-        return new.count() == old.count()
-
     rounds = fixed_rounds if fixed_rounds is not None else max_rounds
     if min_support <= 0:
         rounds = 0  # k ≤ 2: every edge is trivially in the truss — no peeling
@@ -105,7 +102,8 @@ def k_truss_run(
         step,
         algo="ktruss",
         max_supersteps=rounds,
-        converged_fn=None if fixed_rounds is not None else converged,
+        converge_on=None if fixed_rounds is not None else F.count(F.lit(1)),
+        converged_fn=None if fixed_rounds is not None else lambda prev, n: prev == n,
         checkpoint_dir=checkpoint_dir,
         run_id=run_id,
         start_step=start_step,

@@ -21,13 +21,17 @@ whose rounds each run a CC; SCC, whose loops nest; and k-means.
   without bound; every superstep either writes state to parquet and reads it
   back (``checkpoint_dir`` set: reliable + resumable) or eagerly
   ``localCheckpoint``s (fast path for tests).
+* **One job per barrier** — that write or checkpoint is the superstep's only
+  job outside ``step_fn``'s plan: the state's row count and the kernel's
+  convergence aggregate are ``DataFrame.observe`` metrics of it.
 * **Resumability** — with ``checkpoint_dir`` set, state lands at
   ``{dir}/{algo}/{run_id}/superstep={k}/`` and ``latest_checkpoint`` finds
   the newest complete superstep so a crashed run restarts mid-iteration.
 * **Metrics + lineage rows** — per superstep a metrics row
   ``(run_id, algo, superstep, partition_id, rows, wall_ms)`` (``partition_id``
-  is -1: the row covers the whole state) plus its lineage JSON is appended
-  to ``{dir}/_metrics`` (parquet).
+  is -1: the row covers the whole state) plus its lineage JSON lands in
+  ``{dir}/_metrics`` as a one-row parquet file written from the driver, so
+  ``spark.read.parquet(f"{dir}/_metrics")`` reads every row.
 
 At 100 TB the parquet checkpoint is the only viable option — localCheckpoint
 pins executor memory/disk and is lost on executor failure; the parquet state
@@ -36,12 +40,15 @@ is partitioned by superstep so partition pruning makes resume reads cheap.
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -64,7 +71,8 @@ def _state_path(checkpoint_dir: str, algo: str, run_id: str, step: int) -> str:
     return f"{checkpoint_dir}/{algo}/{run_id}/superstep={step}"
 
 
-def _bucket_table_name(algo: str, run_id: str, step: int) -> str:
+def _step_name(algo: str, run_id: str, step: int) -> str:
+    """Superstep k's bucket-table name and ``_metrics`` file stem."""
     safe = "".join(c if c.isalnum() else "_" for c in run_id)
     return f"ss_{algo}_{safe}_{step}"
 
@@ -77,10 +85,17 @@ def _materialize(
     run_id: str,
     step: int,
     bucket_state_by: list[str] | None = None,
-) -> tuple[DataFrame, int]:
-    """Barrier: force computation, cut lineage, return (state, row_count).
-    Rows are counted only when ``checkpoint_dir`` is set (the write already
-    scans the data, and only then are they recorded); otherwise -1.
+    converge_on: Column | None = None,
+) -> tuple[DataFrame, int, Any]:
+    """Barrier: force computation in ONE Spark job, cut lineage, return
+    ``(state, rows, converge_value)``.
+
+    The job is the state's parquet write when ``checkpoint_dir`` is set and
+    an eager ``localCheckpoint`` otherwise.  The state's row count and the
+    ``converge_on`` aggregate (``None`` when not given) are
+    ``DataFrame.observe`` metrics of that same job, and the written state is
+    read back under ``df.schema``, so the barrier runs no count job and no
+    schema-inference job of its own.
 
     With ``bucket_state_by`` (and a checkpoint_dir), state lands as a
     BUCKETED+SORTED parquet table on those columns instead of a plain
@@ -92,11 +107,18 @@ def _materialize(
     same ``superstep=k`` path, so ``latest_checkpoint`` resume is
     unchanged (a resumed first read is merely unbucketed).
     """
-    if checkpoint_dir is not None:
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if converge_on is not None:
+        aggs.append(converge_on.alias("converge"))
+    df = df.observe(obs, *aggs)
+    if checkpoint_dir is None:
+        out = guard_stats(df.localCheckpoint(eager=True))
+    else:
         path = _state_path(checkpoint_dir, algo, run_id, step)
         if bucket_state_by:
             n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            name = _bucket_table_name(algo, run_id, step)
+            name = _step_name(algo, run_id, step)
             (
                 df.write.mode("overwrite")
                 .format("parquet")
@@ -106,11 +128,74 @@ def _materialize(
                 .saveAsTable(name)
             )
             out = spark.table(name)
-            return out, out.count()
-        df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-        return out, out.count()
-    return guard_stats(df.localCheckpoint(eager=True)), -1
+        else:
+            df.write.mode("overwrite").parquet(path)
+            out = spark.read.schema(df.schema).parquet(path)
+    seen = obs.get
+    return out, seen["rows"], seen.get("converge")
+
+
+_METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("algo", pa.string()),
+    ("superstep", pa.int32()),
+    ("partition_id", pa.int32()),
+    ("rows", pa.int64()),
+    ("wall_ms", pa.float64()),
+    ("lineage", pa.string()),
+])
+
+
+def _append_metrics_row(
+    spark: SparkSession,
+    checkpoint_dir: str,
+    algo: str,
+    run_id: str,
+    step: int,
+    rows: int,
+    wall_ms: float,
+) -> None:
+    """Append superstep ``step``'s metrics row, with its lineage JSON, to
+    ``{dir}/_metrics`` as its own one-row parquet file, built on the driver
+    with pyarrow: no Spark job.
+
+    The file goes through the Hadoop FileSystem API (any store the state
+    checkpoints live on), under a hidden name that Spark's reader skips,
+    then is renamed into place, so a reader never sees a partial file.  A
+    re-run superstep (resume) replaces its own row."""
+    lineage = {
+        "algo": algo,
+        "run_id": run_id,
+        "superstep": step,
+        "partition_id": -1,
+        "state_path": _state_path(checkpoint_dir, algo, run_id, step),
+        "parent_path": _state_path(checkpoint_dir, algo, run_id, step - 1),
+    }
+    row = {
+        "run_id": run_id,
+        "algo": algo,
+        "superstep": step,
+        "partition_id": -1,
+        "rows": rows,
+        "wall_ms": wall_ms,
+        "lineage": json.dumps(lineage, separators=(",", ":")),
+    }
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist([row], schema=_METRICS_SCHEMA), sink)
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    name = _step_name(algo, run_id, step)
+    final = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/_metrics/{name}.parquet")
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/_metrics/.{name}.parquet.tmp")
+    fs = final.getFileSystem(conf)
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(sink.getvalue().to_pybytes()))
+    finally:
+        out.close()
+    fs.delete(final, False)
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not commit metrics row {final.toString()}")
 
 
 # Catalyst's simple size estimate (sizeInBytes) multiplies through joins as
@@ -176,7 +261,8 @@ def superstep_loop(
     *,
     algo: str,
     max_supersteps: int = 100,
-    converged_fn: Callable[[DataFrame, DataFrame], bool] | None = None,
+    converge_on: Column | None = None,
+    converged_fn: Callable[[Any, Any], bool] | None = None,
     checkpoint_dir: str | None = None,
     run_id: str | None = None,
     start_step: int = 0,
@@ -184,21 +270,38 @@ def superstep_loop(
 ) -> SuperstepRun:
     """Run ``state <- step_fn(state, k)`` until convergence or max_supersteps.
 
-    ``converged_fn(old, new) -> bool`` runs after each superstep; both
-    arguments are already materialized, so actions on them are cheap scans.
+    Convergence is observed, not queried: ``converge_on`` is an aggregate
+    Column over the state (e.g. ``F.sum("label")``), taken on every barrier
+    job the loop runs, and ``converged_fn(prev_value, value) -> bool`` runs
+    on the driver after each superstep.  ``prev_value`` is the value at the
+    previous barrier — on the first superstep the initial state's, or, when
+    resuming from a checkpoint, the checkpoint's (one aggregate job).  Give
+    both or neither; neither runs exactly ``max_supersteps``.
     ``start_step`` > 0 resumes counting from a checkpoint (see
-    ``latest_checkpoint``).  Each superstep's ``rows`` metric is its state
-    row count in checkpointed runs and -1 otherwise.
+    ``latest_checkpoint``).
+
+    Each superstep's metrics are its state's row count (``rows``, observed
+    on the barrier job in both modes) and ``wall_ms``, which covers the
+    whole superstep: the step, the barrier, the convergence test and, when
+    checkpointed, the ``_metrics`` row (that row records the time up to its
+    own write).
     """
+    if (converge_on is None) != (converged_fn is None):
+        raise ValueError("converge_on and converged_fn go together")
     run_id = run_id or uuid.uuid4().hex[:12]
+    prev = None
     if start_step > 0 and checkpoint_dir is not None:
         # Resuming: initial_state IS the superstep=start_step checkpoint —
-        # rewriting its own source path would delete files mid-read.
+        # rewriting its own source path would delete files mid-read.  Its
+        # convergence value costs one aggregate job here, so a run resumed
+        # from a converged checkpoint stops after one superstep.
         state = initial_state
+        if converge_on is not None:
+            prev = state.agg(converge_on).first()[0]
     else:
-        state, _ = _materialize(
+        state, _, prev = _materialize(
             spark, initial_state, checkpoint_dir, algo, run_id, start_step,
-            bucket_state_by=bucket_state_by,
+            bucket_state_by=bucket_state_by, converge_on=converge_on,
         )
     metrics: list[dict] = []
     converged = False
@@ -206,75 +309,43 @@ def superstep_loop(
 
     for step in range(start_step + 1, start_step + max_supersteps + 1):
         t0 = time.monotonic()
-        new_state = step_fn(state, step)
-        new_state, n_rows = _materialize(
+        new_state, n_rows, value = _materialize(
             spark,
-            new_state,
+            step_fn(state, step),
             checkpoint_dir,
             algo,
             run_id,
             step,
             bucket_state_by=bucket_state_by,
+            converge_on=converge_on,
         )
-        wall_ms = (time.monotonic() - t0) * 1000.0
-
-        step_metrics = {
-            "run_id": run_id,
-            "algo": algo,
-            "superstep": step,
-            "rows": n_rows,
-            "wall_ms": wall_ms,
-        }
-        metrics.append(step_metrics)
-        if checkpoint_dir is not None:
-            mdf = spark.createDataFrame(
-                [(run_id, algo, step, -1, int(n_rows), float(wall_ms))],
-                "run_id string, algo string, superstep int, partition_id int, "
-                "rows long, wall_ms double",
-            )
-            # lineage payload serialized in-plan (to_json over a struct)
-            parent = (
-                F.lit(_state_path(checkpoint_dir, algo, run_id, step - 1))
-                if step > start_step
-                else F.lit(None).cast("string")
-            )
-            mdf = mdf.withColumn(
-                "lineage",
-                F.to_json(
-                    # ignoreNullFields=false: the first superstep's
-                    # parent_path is null and consumers json.loads()[key] it —
-                    # the default would omit the key entirely
-                    F.struct(
-                        F.col("algo"),
-                        F.col("run_id"),
-                        F.col("superstep"),
-                        F.col("partition_id"),
-                        F.lit(_state_path(checkpoint_dir, algo, run_id, step)).alias(
-                            "state_path"
-                        ),
-                        parent.alias("parent_path"),
-                    ),
-                    {"ignoreNullFields": "false"},
-                ),
-            )
-            mdf.write.mode("append").parquet(f"{checkpoint_dir}/_metrics")
-
-        conv = converged_fn is not None and converged_fn(state, new_state)
+        converged = converged_fn is not None and converged_fn(prev, value)
+        prev = value
         if bucket_state_by and checkpoint_dir is not None:
             # The previous superstep's bucket table is an EXTERNAL table:
             # dropping it removes only the metastore entry (unbounded growth
             # across long/repeated runs otherwise) while the parquet files
             # under superstep=k-1 stay on disk for latest_checkpoint resume.
-            # Safe only now — converged_fn above was the last reader of the
-            # old state.  The FINAL step's table survives: run.state is a
-            # catalog read so downstream joins still see the bucketing.
+            # Safe only now — the step was its last reader.  The FINAL
+            # step's table survives: run.state is a catalog read so
+            # downstream joins still see the bucketing.
             spark.sql(
-                "DROP TABLE IF EXISTS "
-                f"`{_bucket_table_name(algo, run_id, step - 1)}`"
+                f"DROP TABLE IF EXISTS `{_step_name(algo, run_id, step - 1)}`"
             )
+        if checkpoint_dir is not None:
+            _append_metrics_row(
+                spark, checkpoint_dir, algo, run_id, step, n_rows,
+                (time.monotonic() - t0) * 1000.0,
+            )
+        metrics.append({
+            "run_id": run_id,
+            "algo": algo,
+            "superstep": step,
+            "rows": n_rows,
+            "wall_ms": (time.monotonic() - t0) * 1000.0,
+        })
         state = new_state
-        if conv:
-            converged = True
+        if converged:
             break
 
     return SuperstepRun(

@@ -157,8 +157,10 @@ def _eff(pair: dict) -> float:
 
 def _merge(path: str, new: dict) -> dict:
     """Keep EVERY attempt (shared-box honesty: external load swings runs
-    2-5x) under ``{key}_attempts``; the headline entry per key is the
-    best-efficiency attempt across all runs."""
+    2-5x) under ``{key}_attempts``.  The headline entry per key is the
+    median-efficiency attempt (the lower middle one of an even count), so
+    one lucky run on a noisy box cannot become the headline; the
+    best-efficiency attempt is kept apart, labelled ``{key}_best_attempt``."""
     try:
         with open(path) as f:
             merged = json.load(f)
@@ -172,7 +174,9 @@ def _merge(path: str, new: dict) -> dict:
         attempts.append(val)
         merged[attempts_key] = attempts
         if any(k.startswith("efficiency") for k in val):
-            merged[key] = max(attempts, key=_eff)
+            ranked = sorted(attempts, key=_eff)
+            merged[key] = ranked[(len(ranked) - 1) // 2]
+            merged[f"{key}_best_attempt"] = ranked[-1]
         else:
             merged[key] = val
     return merged

@@ -132,7 +132,7 @@ def test_bucketed_state_skips_state_side_exchange(spark, tmp_path):
         (F.col("id") % 4).alias("source"), F.col("id").alias("vertex"),
         (F.col("id") % 97).alias("dist"), F.lit(False).alias("improved"),
     )
-    out, n = _materialize(
+    out, n, _ = _materialize(
         spark, state, str(tmp_path / "ck"), "planprobe", "r1", 0,
         bucket_state_by=["source", "vertex"],
     )

@@ -3,8 +3,9 @@
 The judge (and the driver) re-run ``scripts/scaling_bench.py``; these pin
 the harness's record-keeping contracts without spawning any Spark JVM:
 
-* ``_merge`` keeps EVERY attempt and promotes the best-efficiency one to
-  the headline (shared-box honesty: external load swings runs 2-5x).
+* ``_merge`` keeps EVERY attempt and headlines the median-efficiency one,
+  with the best one under its own ``_best_attempt`` label (shared-box
+  honesty: external load swings runs 2-5x).
 * Pinned rows (``--pin``) never share a key with unpinned rows, so the
   two methodologies can't contaminate each other's attempt lists.
 * ``_maybe_pin`` only wraps the command when pinning is on, and builds
@@ -33,7 +34,7 @@ def _pair(eff):
     return {"lo": {}, "hi": {}, "efficiency_pagerank": eff}
 
 
-def test_merge_keeps_every_attempt_and_promotes_best(tmp_path):
+def test_merge_keeps_every_attempt_and_headlines_the_median(tmp_path):
     path = str(tmp_path / "bench.json")
     m1 = sb._merge(path, {"k": _pair(0.5)})
     with open(path, "w") as f:
@@ -42,7 +43,8 @@ def test_merge_keeps_every_attempt_and_promotes_best(tmp_path):
     with open(path, "w") as f:
         json.dump(m2, f)
     m3 = sb._merge(path, {"k": _pair(0.7)})
-    assert m3["k"]["efficiency_pagerank"] == 0.9  # best stays the headline
+    assert m3["k"]["efficiency_pagerank"] == 0.7  # the median is the headline
+    assert m3["k_best_attempt"]["efficiency_pagerank"] == 0.9  # labelled as best
     effs = [a["efficiency_pagerank"] for a in m3["k_attempts"]]
     assert sorted(effs) == [0.5, 0.7, 0.9]  # no attempt is dropped
 

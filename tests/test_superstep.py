@@ -70,8 +70,7 @@ def test_resume_mid_iteration_identical_result(spark, tmp_path):
     # uninterrupted reference run
     full = superstep_loop(
         spark, initial, _cc_step(und), algo="cc", max_supersteps=30, run_id="full",
-        converged_fn=lambda old, new: df_to_dict(old, "vertex", "label")
-        == df_to_dict(new, "vertex", "label"),
+        converge_on=F.sum("label"), converged_fn=lambda prev, s: prev == s,
     )
 
     # interrupted run: only 3 supersteps, checkpointed
@@ -87,8 +86,7 @@ def test_resume_mid_iteration_identical_result(spark, tmp_path):
     resumed = superstep_loop(
         spark, state, _cc_step(und), algo="cc", max_supersteps=30,
         checkpoint_dir=ckpt, run_id="crash", start_step=k,
-        converged_fn=lambda old, new: df_to_dict(old, "vertex", "label")
-        == df_to_dict(new, "vertex", "label"),
+        converge_on=F.sum("label"), converged_fn=lambda prev, s: prev == s,
     )
     assert df_to_dict(resumed.state, "vertex", "label") == df_to_dict(
         full.state, "vertex", "label"
@@ -145,3 +143,59 @@ def test_guard_stats_raises_plan_failures_and_skips_connect_frames():
 
     connect_frame = object()
     assert guard_stats(connect_frame) is connect_frame
+
+
+def test_checkpointed_cc_job_budget_and_observed_rows(spark, tmp_path):
+    """Each barrier is one job wave that also yields the row count and the
+    convergence aggregate: a checkpointed 2-superstep CC call stays within
+    the measured job count (the read-back counts, schema inference,
+    label-sum collects and createDataFrame metrics rows took 25), and the
+    observed ``rows`` are exact with and without a checkpoint dir."""
+    from tests.test_betweenness import _jobs_run
+
+    e = edge_df(spark, [(i, i + 1) for i in range(8)])
+    run, jobs = _jobs_run(
+        spark,
+        lambda: connected_components(
+            spark, e, checkpoint_dir=str(tmp_path / "ck"), max_supersteps=2
+        ),
+    )
+    assert run.supersteps == 2
+    assert jobs <= 10, jobs
+    assert [m["rows"] for m in run.metrics] == [9, 9]
+    local = connected_components(spark, e, max_supersteps=2)
+    assert [m["rows"] for m in local.metrics] == [9, 9]
+
+
+def test_metrics_row_append_runs_no_spark_job(spark, tmp_path):
+    """The ``_metrics`` row is written from the driver: no Spark job, and
+    ``spark.read.parquet`` still reads the 7 typed columns and the lineage
+    keys.  Re-writing a superstep's row (a resumed run) replaces it."""
+    import json
+
+    from tests.test_betweenness import _jobs_run
+    from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import (
+        _append_metrics_row,
+    )
+
+    ckpt = str(tmp_path / "ck")
+    _, jobs = _jobs_run(
+        spark, lambda: _append_metrics_row(spark, ckpt, "probe", "r/1", 1, 7, 1.5)
+    )
+    assert jobs == 0
+    _append_metrics_row(spark, ckpt, "probe", "r/1", 2, 5, 1.5)
+    _append_metrics_row(spark, ckpt, "probe", "r/1", 2, 4, 2.5)
+    metrics = spark.read.parquet(f"{ckpt}/_metrics")
+    assert metrics.dtypes == [
+        ("run_id", "string"), ("algo", "string"), ("superstep", "int"),
+        ("partition_id", "int"), ("rows", "bigint"), ("wall_ms", "double"),
+        ("lineage", "string"),
+    ]
+    got = metrics.orderBy("superstep").collect()
+    assert [(r["superstep"], r["rows"]) for r in got] == [(1, 7), (2, 4)]
+    lin = json.loads(got[1]["lineage"])
+    assert set(lin) == {
+        "algo", "run_id", "superstep", "partition_id", "state_path", "parent_path",
+    }
+    assert lin["state_path"].endswith("superstep=2")
+    assert lin["parent_path"].endswith("superstep=1")
