@@ -17,16 +17,21 @@ Two interchangeable implementations, cross-checked in tests:
     broadcast to turn the frontier×edges join into a broadcast join.
 
 ``betweenness_csr``
-    The fast path when the graph (not the state) fits per executor: write the
-    edge table to a parquet artifact (one distributed job, no driver
-    materialization), have each executor's workers build + cache a numpy CSR
-    from it, and parallelize over SOURCES — each Arrow batch of sources runs
-    a vectorized numpy Brandes sweep inside ``mapInPandas``.  At
-    10^12-vertex scale exact betweenness is
-    infeasible for any engine; the standard practice is source sampling
-    (Brandes & Pich, "Centrality Estimation in Large Networks", 2007) — pass
-    ``sources=`` a sample and both implementations compute the partial sums
-    exactly.
+    The fast path when the graph (not the state) fits per executor:
+    ``prepare_csr`` writes the edge table to a parquet artifact in one
+    distributed job that also observes ``max(id)`` and the edge count, so no
+    table reaches the driver and nothing is read back.  The sweep then runs
+    one wave of at most ``p`` Python tasks, parallel over SOURCES: each
+    worker builds and caches a numpy CSR from the artifact, and each Arrow
+    batch of sources runs a vectorized numpy Brandes inside
+    ``mapInPandas``.  The sparse partial sums and one zero row per vertex
+    meet in one aggregation, so every id 0..n-1 scores without a join.  The
+    weighted twin (``betweenness_weighted.prepare_csr_weighted``) shares the
+    artifact writer and the sweep driver; only its kernel differs.  At
+    10^12-vertex scale exact betweenness is infeasible for any engine; the
+    standard practice is source sampling (Brandes & Pich, "Centrality
+    Estimation in Large Networks", 2007) — pass ``sources=`` a sample and
+    both implementations compute the partial sums exactly.
 
 Both accept directed or undirected graphs; undirected scores are halved to
 match ``networkx.betweenness_centrality(normalized=False)``.
@@ -40,10 +45,11 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _BROADCAST_FRONTIER_MAX
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _observed_rows
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_levels
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import prepare_adjacency
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
@@ -120,13 +126,14 @@ def betweenness_bsp(
     if directed:
         reversed_edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         e_in = prepare_adjacency(spark, reversed_edges, True, num_partitions)
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
+    endpoints = e.select(F.col("src").alias("vertex")).unionByName(
+        e.select(F.col("dst").alias("vertex"))
     )
-    # every vertex scores, 0.0 unless a batch credits it
-    bc_acc = vertices.select("vertex", F.lit(0.0).alias("bc"))
+    # the default source set streams every vertex, so it needs them distinct
+    vertices = endpoints.distinct() if sources is None else None
+    # every vertex scores, 0.0 unless a batch credits it; the first batch's
+    # groupBy collapses the duplicate endpoint rows
+    bc_acc = endpoints.select("vertex", F.lit(0.0).alias("bc"))
     state_acc: DataFrame | None = None
     n_sources = 0
     total_steps = 0
@@ -198,6 +205,8 @@ def betweenness_bsp(
                 all_state if state_acc is None else state_acc.unionByName(all_state)
             )
 
+    if not n_sources:  # no batch ran to collapse the endpoint rows
+        bc_acc = _checkpoint(bc_acc.distinct())
     scale = 1.0 if directed else 0.5
     if estimate:
         scale *= bc_acc.count() / max(n_sources, 1)
@@ -278,46 +287,55 @@ def _brandes_numpy(
     return bc
 
 
-def build_csr_arrays(src: np.ndarray, dst: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """CSR (indptr, indices) from parallel src/dst arrays with dense ids 0..n-1."""
+def build_csr_arrays(
+    src: np.ndarray, dst: np.ndarray, n: int, *payload: np.ndarray
+) -> tuple[np.ndarray, ...]:
+    """CSR ``(indptr, indices, *payload)`` from parallel src/dst arrays with
+    dense ids 0..n-1; each payload array (edge weights) follows its edge."""
     order = np.lexsort((dst, src))
-    src, dst = src[order], dst[order]
     indptr = np.zeros(n + 1, dtype=np.int64)
     np.add.at(indptr, src + 1, 1)
     np.cumsum(indptr, out=indptr)
-    return indptr, dst
+    return (indptr, dst[order], *(a[order] for a in payload))
 
 
 # Per-worker-process CSR cache: each executor's Python workers build the CSR
 # from the parquet artifact ONCE and reuse it across every sweep/task.  Keyed
 # by artifact path; holds a single entry (a new artifact evicts the old).
-_CSR_CACHE: dict[str, tuple[np.ndarray, np.ndarray, int]] = {}
+_CSR_CACHE: dict[str, tuple] = {}
 
 
 @dataclass(frozen=True)
 class CsrArtifact:
     """Picklable handle to an executor-side CSR.
 
-    ``prepare_csr`` writes the deduped/symmetrized edge table to a parquet
-    artifact (shared storage on a real cluster; tmpdir in local mode) and
-    ships only this tiny handle to tasks.  Each Python worker lazily builds
-    the numpy CSR from the artifact and caches it per process — the DRIVER
-    never materializes the edge table (the r1 driver-side collect was an OOM
-    scale-killer at 100×).  This path targets graphs whose CSR
+    ``prepare_csr`` (or ``prepare_csr_weighted``) writes the deduped edge
+    table to a parquet artifact (shared storage on a real cluster; tmpdir in
+    local mode) and ships only this tiny handle to tasks.  Each Python worker
+    lazily builds the numpy CSR from the artifact and caches it per process —
+    the DRIVER never materializes the edge table (the r1 driver-side collect
+    was an OOM scale-killer at 100×).  This path targets graphs whose CSR
     fits per executor (10^9 edges ≈ 8 GB); beyond that use
-    ``betweenness_bsp``.
+    ``betweenness_bsp``.  A ``weighted`` artifact carries a ``w`` column and
+    loads as ``(indptr, indices, weights, n)``, otherwise as
+    ``(indptr, indices, n)``: the argument order of the matching kernel.
     """
 
     path: str
     n: int
     n_edges: int
+    weighted: bool = False
+
+    @property
+    def columns(self) -> list[str]:
+        return ["src", "dst", "w"] if self.weighted else ["src", "dst"]
 
     @property
     def _pyarrow_uri(self) -> str:
         # Spark writes s3a:// URIs; pyarrow's S3 filesystem answers to s3://
         return self.path.replace("s3a://", "s3://", 1)
 
-    def load(self) -> tuple[np.ndarray, np.ndarray, int]:
+    def load(self) -> tuple:
         hit = _CSR_CACHE.get(self.path)
         if hit is None:
             import pyarrow.dataset as pads
@@ -326,13 +344,14 @@ class CsrArtifact:
             # hdfs://, gs://) via FileSystem.from_uri; default
             # ignore_prefixes skips Spark's _SUCCESS / hidden files
             t = pads.dataset(self._pyarrow_uri, format="parquet").to_table(
-                columns=["src", "dst"]
+                columns=self.columns
             )
-            src = t.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-            dst = t.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-            indptr, indices = build_csr_arrays(src, dst, self.n)
+            src, dst, *payload = (
+                t.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
+                for c in self.columns
+            )
             _CSR_CACHE.clear()
-            hit = (indptr, indices, self.n)
+            hit = (*build_csr_arrays(src, dst, self.n, *payload), self.n)
             _CSR_CACHE[self.path] = hit
         return hit
 
@@ -351,33 +370,34 @@ class CsrArtifact:
             shutil.rmtree(self.path.removeprefix("file:"), ignore_errors=True)
 
 
-def prepare_csr(
+def write_csr_artifact(
     spark: SparkSession,
-    edges: DataFrame,
+    e: DataFrame,
+    artifact_dir: str | None,
     *,
-    directed: bool = False,
-    artifact_dir: str | None = None,
+    weighted: bool = False,
 ) -> tuple[CsrArtifact, DataFrame]:
-    """One-off distributed CSR prep: (CsrArtifact, default_sources).
+    """Write the edge table ``e`` (``src, dst`` plus ``w`` when weighted) as
+    a CSR artifact: ``(CsrArtifact, default_sources)``.
 
-    Fully distributed — dedup/symmetrize + max-id run as Spark jobs and the
-    edge table is WRITTEN (never collected): the only driver-side values are
-    two scalars.  Pass ``artifact_dir`` on a cluster (s3a://…); local mode
-    defaults to a tmpdir.  Dense vertex ids 0..n-1 are the contract
+    The write is the only job: ``max(id)`` and the edge count are
+    ``DataFrame.observe`` metrics of it, so nothing is read back and only
+    two scalars reach the driver.  Dense vertex ids 0..n-1 are the contract
     (``densify_vertices`` first), so the default source set is
     ``spark.range(n)`` — a DataFrame, never a driver-side Python list
     (10^9 vertices would be tens of GB of driver memory as a list).
     """
-    e = traversal_edges(edges, directed)
     path = artifact_dir or tempfile.mkdtemp(prefix="spark_csr_")
-    e.write.mode("overwrite").parquet(path)
-    written = spark.read.parquet(path)
-    row = written.agg(
-        F.greatest(F.max("src"), F.max("dst")).alias("mx"),
+    obs = Observation()
+    e.observe(
+        obs,
+        F.max(F.greatest("src", "dst")).alias("mx"),
         F.count(F.lit(1)).alias("m"),
-    ).first()
-    art = CsrArtifact(path=path, n=int(row["mx"]) + 1, n_edges=int(row["m"]))
-    csr_gb = (art.n_edges + art.n + 1) * 8 / 1e9
+    ).write.mode("overwrite").parquet(path)
+    seen = obs.get
+    n = 0 if seen["mx"] is None else int(seen["mx"]) + 1
+    art = CsrArtifact(path=path, n=n, n_edges=int(seen["m"]), weighted=weighted)
+    csr_gb = (art.n_edges * (len(art.columns) - 1) + art.n + 1) * 8 / 1e9
     if csr_gb > 4.0:
         import logging
 
@@ -391,6 +411,94 @@ def prepare_csr(
     return art, spark.range(art.n).select(F.col("id").alias("source"))
 
 
+def prepare_csr(
+    spark: SparkSession,
+    edges: DataFrame,
+    *,
+    directed: bool = False,
+    artifact_dir: str | None = None,
+) -> tuple[CsrArtifact, DataFrame]:
+    """One-off distributed CSR prep: (CsrArtifact, default_sources).
+
+    Dedup/symmetrize run as Spark stages feeding ``write_csr_artifact``'s
+    one write job; the edge table is written, never collected.  Pass
+    ``artifact_dir`` on a cluster (s3a://…); local mode defaults to a
+    tmpdir.
+    """
+    return write_csr_artifact(spark, traversal_edges(edges, directed), artifact_dir)
+
+
+def csr_sweep(
+    spark: SparkSession,
+    csr: CsrArtifact,
+    kernel,
+    sources: "DataFrame | list[int]",
+    *,
+    directed: bool = False,
+    num_partitions: int | None = None,
+) -> BetweennessResult:
+    """The source-parallel sweep both CSR paths share: each Arrow batch of
+    sources runs ``kernel(*csr.load(), sources)`` against the worker-cached
+    CSR; the sparse partial bc vectors and one zero row per vertex sum in
+    one hash aggregation, so every id 0..n-1 scores.
+
+    ``sources`` is a DataFrame with one long column (any name — aliased to
+    ``source``), e.g. the artifact's default ``spark.range(n)``, so the
+    source universe never lands on the driver; its size is observed on the
+    sweep's own job.  A small explicitly-sampled Python list is also
+    accepted.
+    """
+    t0 = time.monotonic()
+    p = num_partitions or spark.sparkContext.defaultParallelism
+    # One wave of Python tasks.  Every Python task pays about 0.2 s of fixed
+    # CPU before the UDF's first line runs, worker reuse or not: pyspark's
+    # setup_spark_files calls importlib.invalidate_caches() on every task,
+    # and zipimport then re-reads the central directory of each zip on the
+    # worker's sys.path (pyspark.zip, the py4j zip, the spark-core jar).  A
+    # no-op task on one partition shows an executorRunTime of 0.15-0.26 s
+    # (4 vCPU, pyspark 4.1.2), against 30-90 ms of UDF work per kernel task
+    # on a 64-source, 29k-pair sweep.  So the sweep runs at most p kernel
+    # tasks, not more waves of smaller ones.  A source list is built already split into
+    # min(p, |sources|) slices, with no shuffle for AQE to coalesce.  A
+    # sources DataFrame is repartition(p)ed: REPARTITION_BY_NUM is exempt
+    # from AQE's coalescing, which would merge the few-KB table into one
+    # task and serialize the sweep.
+    if isinstance(sources, DataFrame):
+        src_df, seen = _observed_rows(
+            sources.select(F.col(sources.columns[0]).cast("long").alias("source"))
+        )
+        src_df = src_df.repartition(p)
+    else:
+        src_df, seen = source_frame(spark, sources, max(1, min(p, len(sources)))), None
+
+    def run_batches(batches):
+        arrays = csr.load()
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            bc = kernel(*arrays, pdf["source"].to_numpy(dtype=np.int64))
+            nz = np.nonzero(bc)[0]
+            yield pd.DataFrame({"vertex": nz.astype(np.int64), "bc": bc[nz]})
+
+    zeros = spark.range(csr.n).select(F.col("id").alias("vertex"), F.lit(0.0).alias("bc"))
+    scale = 1.0 if directed else 0.5
+    bc = (
+        src_df.mapInPandas(run_batches, "vertex long, bc double")
+        .unionByName(zeros)
+        .groupBy("vertex")
+        .agg((F.sum("bc") * F.lit(scale)).alias("bc"))
+        .localCheckpoint(eager=True)
+        .transform(guard_stats)
+    )
+    n_sources = len(sources) if seen is None else seen.get["rows"]
+    return BetweennessResult(
+        bc=bc,
+        supersteps=n_sources,
+        edges_traversed=n_sources * csr.n_edges,
+        wall_s=time.monotonic() - t0,
+    )
+
+
 def betweenness_csr_sweep(
     spark: SparkSession,
     csr: CsrArtifact,
@@ -399,57 +507,10 @@ def betweenness_csr_sweep(
     directed: bool = False,
     num_partitions: int | None = None,
 ) -> BetweennessResult:
-    """The source-parallel sweep over a prepared CSR artifact: each Arrow
-    batch of sources runs a vectorized numpy Brandes kernel against the
-    worker-cached CSR; partial bc vectors come back sparse and sum in one
-    hash aggregation.
-
-    ``sources`` is a DataFrame with one long column (any name — aliased to
-    ``source``), e.g. ``prepare_csr``'s default ``spark.range(n)``, so the
-    source universe never lands on the driver; a small explicitly-sampled
-    Python list is also accepted.
-    """
-    t0 = time.monotonic()
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    n = csr.n
-    n_edges = csr.n_edges
-    if isinstance(sources, DataFrame):
-        src_df = sources.select(F.col(sources.columns[0]).cast("long").alias("source"))
-        n_sources = src_df.count()
-    else:
-        src_df = source_frame(spark, sources)
-        n_sources = len(sources)
-    # Explicit repartition with a fixed count, NOT groupBy+applyInPandas: the
-    # source table is a few KB, so AQE's partition coalescing would merge the
-    # tiny shuffle into ONE task and serialize the whole sweep — the cost
-    # here is per-row UDF compute, which AQE's size-based advisory can't see.
-    # repartition(n) pins the partition count (REPARTITION_BY_NUM is exempt
-    # from coalescing), giving p*4 parallel kernel tasks.
-    src_df = src_df.repartition(p * 4)
-
-    def run_batches(batches):
-        ip, ix, nn = csr.load()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bc = _brandes_numpy(ip, ix, nn, pdf["source"].to_numpy(dtype=np.int64))
-            nz = np.nonzero(bc)[0]
-            yield pd.DataFrame({"vertex": nz.astype(np.int64), "bc": bc[nz]})
-
-    partial = src_df.mapInPandas(run_batches, "vertex long, bc double")
-    scale = 1.0 if directed else 0.5
-    all_v = spark.range(n).select(F.col("id").alias("vertex"))
-    bc = (
-        all_v.join(partial.groupBy("vertex").agg(F.sum("bc").alias("bc")), "vertex", "left")
-        .select("vertex", (F.coalesce(F.col("bc"), F.lit(0.0)) * F.lit(scale)).alias("bc"))
-    )
-    bc = bc.localCheckpoint(eager=True).transform(guard_stats)
-    wall = time.monotonic() - t0
-    return BetweennessResult(
-        bc=bc,
-        supersteps=n_sources,
-        edges_traversed=n_sources * n_edges,
-        wall_s=wall,
+    """``csr_sweep`` with the BFS Brandes kernel over a ``prepare_csr``
+    artifact."""
+    return csr_sweep(
+        spark, csr, _brandes_numpy, sources, directed=directed, num_partitions=num_partitions
     )
 
 

@@ -51,20 +51,22 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
     BetweennessResult,
+    CsrArtifact,
     _source_batches,
+    csr_sweep,
+    write_csr_artifact,
 )
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
 
-def _prepare_weighted_edges(
-    spark: SparkSession, weighted_edges: DataFrame, directed: bool, p: int
-) -> DataFrame:
+def _weighted_pairs(weighted_edges: DataFrame, directed: bool) -> DataFrame:
     e = weighted_edges.select("src", "dst", F.col("w").cast("long").alias("w"))
     if not directed:
         e = e.unionByName(
@@ -72,13 +74,7 @@ def _prepare_weighted_edges(
         )
     # parallel edges keep the MINIMUM weight (only the lightest can lie on a
     # shortest path; heavier parallels would corrupt sigma if kept)
-    return (
-        e.where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
+    return e.where(F.col("src") != F.col("dst")).groupBy("src", "dst").agg(F.min("w").alias("w"))
 
 
 def betweenness_weighted(
@@ -123,7 +119,7 @@ def betweenness_weighted(
             "weights (w <= 0 or non-integral w found) — zero or fractional "
             "weights would corrupt shortest-path hop structure"
         )
-    e = _prepare_weighted_edges(spark, weighted_edges, directed, p)
+    e = _weighted_pairs(weighted_edges, directed).repartition(p, "src").persist()
     e.count()
     vertices = (
         e.select(F.col("src").alias("vertex"))
@@ -350,72 +346,16 @@ def betweenness_weighted(
 
 # ---------------------------------------------------------------------------
 # Weighted CSR + source-parallel numpy fast path — the Dijkstra-Brandes
-# sibling of betweenness.betweenness_csr_sweep.  Same division of labor:
-# Spark distributes SOURCES (mapInPandas over an Arrow-batched source table,
-# per-worker CSR cache), numpy runs the per-source kernel.  Integral weights
-# let the kernel use Dial's bucket levels (process distances 0,1,2,… in
-# order; weights ≥ 1 mean a level is settled when reached), so all three
-# passes are the same gather/scatter vectorization as the unweighted kernel
-# with "BFS level" replaced by "distance level" — no per-edge Python loop,
-# no heap.
+# sibling of betweenness.betweenness_csr_sweep.  It shares the artifact writer
+# and the sweep driver (betweenness.write_csr_artifact / csr_sweep); only the
+# per-source kernel is its own.  Integral weights let the kernel use Dial's
+# bucket levels (process distances 0,1,2,… in order; weights ≥ 1 mean a level
+# is settled when reached), so all three passes are the same gather/scatter
+# vectorization as the unweighted kernel with "BFS level" replaced by
+# "distance level" — no per-edge Python loop, no heap.
 # ---------------------------------------------------------------------------
 
-import dataclasses
-import tempfile
-
-import numpy as np
-import pandas as pd
-
-
-def build_wcsr_arrays(
-    src: np.ndarray, dst: np.ndarray, w: np.ndarray, n: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Weighted CSR (indptr, indices, weights) from parallel arrays."""
-    order = np.lexsort((dst, src))
-    src, dst, w = src[order], dst[order], w[order]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, src + 1, 1)
-    np.cumsum(indptr, out=indptr)
-    return indptr, dst, w
-
-
 _INF = np.iinfo(np.int64).max
-
-_WCSR_CACHE: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray, int]] = {}
-
-
-@dataclasses.dataclass(frozen=True)
-class CsrWArtifact:
-    """Picklable handle to an executor-side weighted CSR (see
-    betweenness.CsrArtifact for the artifact/cache design — this is the
-    (src, dst, w) variant with its own per-worker cache)."""
-
-    path: str
-    n: int
-    n_edges: int
-
-    def load(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-        hit = _WCSR_CACHE.get(self.path)
-        if hit is None:
-            import pyarrow.dataset as pads
-
-            uri = self.path.replace("s3a://", "s3://", 1)
-            t = pads.dataset(uri, format="parquet").to_table(
-                columns=["src", "dst", "w"]
-            )
-            src = t.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-            dst = t.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-            w = t.column("w").to_numpy(zero_copy_only=False).astype(np.int64)
-            _WCSR_CACHE.clear()
-            hit = (*build_wcsr_arrays(src, dst, w, self.n), self.n)
-            _WCSR_CACHE[self.path] = hit
-        return hit
-
-    def cleanup(self) -> None:
-        import shutil
-
-        if "://" not in self.path or self.path.startswith("file:"):
-            shutil.rmtree(self.path.removeprefix("file:"), ignore_errors=True)
 
 
 def _brandes_weighted_numpy(
@@ -499,88 +439,47 @@ def prepare_csr_weighted(
     *,
     directed: bool = False,
     artifact_dir: str | None = None,
-) -> tuple[CsrWArtifact, DataFrame]:
+) -> tuple[CsrArtifact, DataFrame]:
     """One-off distributed weighted-CSR prep — the weighted twin of
     betweenness.prepare_csr: dedup/symmetrize (parallel edges keep the
-    minimum weight), validate strictly-positive integral weights, write the
-    (src, dst, w) table to a parquet artifact, return (handle, default
-    source DataFrame).  Only two scalars ever reach the driver."""
-    p = spark.sparkContext.defaultParallelism
-    raw = weighted_edges.select("src", "dst", "w")
-    bad = raw.where(
-        (F.col("w") <= 0) | (F.col("w") != F.col("w").cast("long"))
-    ).limit(1)
-    if bad.count() > 0:
+    minimum weight) and write the (src, dst, w) table with
+    ``write_csr_artifact``, returning (handle, default source DataFrame).
+
+    Weights must be strictly positive integers.  The bad-weight count is
+    observed on the write job, and the call raises (removing the artifact)
+    before any sweep can run on it."""
+    w = F.col("w")
+    checked = Observation()
+    raw = weighted_edges.select("src", "dst", "w").observe(
+        checked, F.count_if((w <= 0) | (w != w.cast("long"))).alias("bad")
+    )
+    art, default_sources = write_csr_artifact(
+        spark, _weighted_pairs(raw, directed), artifact_dir, weighted=True
+    )
+    if checked.get["bad"]:
+        art.cleanup()
         raise ValueError(
             "weighted CSR requires strictly positive integral weights "
             "(Dial's levels settle by integer distance)"
         )
-    e = _prepare_weighted_edges(spark, raw, directed, p)
-    path = artifact_dir or tempfile.mkdtemp(prefix="spark_wcsr_")
-    e.write.mode("overwrite").parquet(path)
-    e.unpersist()
-    written = spark.read.parquet(path)
-    row = written.agg(
-        F.greatest(F.max("src"), F.max("dst")).alias("mx"),
-        F.count(F.lit(1)).alias("m"),
-    ).first()
-    art = CsrWArtifact(path=path, n=int(row["mx"]) + 1, n_edges=int(row["m"]))
-    return art, spark.range(art.n).select(F.col("id").alias("source"))
+    return art, default_sources
 
 
 def betweenness_weighted_csr_sweep(
     spark: SparkSession,
-    csr: CsrWArtifact,
+    csr: CsrArtifact,
     sources: "DataFrame | list[int]",
     *,
     directed: bool = False,
     num_partitions: int | None = None,
 ) -> BetweennessResult:
-    """Source-parallel Dijkstra-Brandes over a prepared weighted CSR —
-    identical orchestration to betweenness.betweenness_csr_sweep (Arrow
-    source batches, per-worker CSR cache, sparse partials summed in one
-    hash aggregation); the per-source kernel is _brandes_weighted_numpy."""
-    t0 = time.monotonic()
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    if isinstance(sources, DataFrame):
-        src_df = sources.select(F.col(sources.columns[0]).cast("long").alias("source"))
-        n_sources = src_df.count()
-    else:
-        src_df = source_frame(spark, sources)
-        n_sources = len(sources)
-    # pin the partition count — see betweenness_csr_sweep for why AQE's
-    # size-based coalescing must not see this tiny-but-compute-heavy table
-    src_df = src_df.repartition(p * 4)
-
-    n, n_edges = csr.n, csr.n_edges
-
-    def run_batches(batches):
-        ip, ix, ws, nn = csr.load()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            bcv = _brandes_weighted_numpy(
-                ip, ix, ws, nn, pdf["source"].to_numpy(dtype=np.int64)
-            )
-            nz = np.nonzero(bcv)[0]
-            yield pd.DataFrame({"vertex": nz.astype(np.int64), "bc": bcv[nz]})
-
-    partial = src_df.mapInPandas(run_batches, "vertex long, bc double")
-    scale = 1.0 if directed else 0.5
-    all_v = spark.range(n).select(F.col("id").alias("vertex"))
-    out = (
-        all_v.join(
-            partial.groupBy("vertex").agg(F.sum("bc").alias("bc")), "vertex", "left"
-        )
-        .select(
-            "vertex", (F.coalesce(F.col("bc"), F.lit(0.0)) * F.lit(scale)).alias("bc")
-        )
-        .localCheckpoint(eager=True)
-        .transform(guard_stats)
-    )
-    return BetweennessResult(
-        bc=out,
-        supersteps=n_sources,
-        edges_traversed=n_sources * n_edges,
-        wall_s=time.monotonic() - t0,
+    """Source-parallel Dijkstra-Brandes over a ``prepare_csr_weighted``
+    artifact: betweenness.csr_sweep with ``_brandes_weighted_numpy``."""
+    return csr_sweep(
+        spark,
+        csr,
+        _brandes_weighted_numpy,
+        sources,
+        directed=directed,
+        num_partitions=num_partitions,
     )

@@ -27,14 +27,17 @@ from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guar
 _BROADCAST_FRONTIER_MAX = 500_000  # rows; below this, hint broadcast of the frontier
 
 
-def source_frame(spark: SparkSession, ids) -> DataFrame:
-    """``(source long)``, one row per id of a driver-side list, built from a
-    literal array, so reading it needs no Python worker (a
-    ``createDataFrame`` of the list runs one per read)."""
-    lits = [F.lit(int(s)) for s in ids]
-    return spark.range(1).select(
-        F.explode(F.array(*lits).cast("array<long>")).alias("source")
-    )
+def source_frame(spark: SparkSession, ids, num_slices: int = 1) -> DataFrame:
+    """``(source long)``, one row per id of a driver-side list, already split
+    into ``num_slices`` partitions: a range of positions indexes a literal
+    array, so the table needs no shuffle to spread and reading it needs no
+    Python worker (a ``createDataFrame`` of the list runs one per read).
+    The array is one string literal that the optimizer folds, because a
+    ``F.lit`` per id costs one py4j round trip each (1-3 ms); ``try_cast``
+    only matters for an empty list, whose one piece is ``''``."""
+    ids = [int(s) for s in ids]
+    lits = F.split(F.lit(",".join(map(str, ids))), ",").try_cast("array<long>")
+    return spark.range(0, len(ids), 1, num_slices).select(lits[F.col("id")].alias("source"))
 
 
 def prepare_adjacency(

@@ -80,9 +80,9 @@ def test_bsp_traversal_counters(spark):
     assert bsp.edges_traversed == csr.edges_traversed == len(sources) * 2 * len(edges)
 
 
-def _jobs_run(spark, action):
-    """(result, number of Spark jobs) of ``action()``, counted through a
-    job group and the status tracker."""
+def _job_ids(spark, action):
+    """(result, ids of the Spark jobs) of ``action()``, found through a job
+    group and the status tracker."""
     sc = spark.sparkContext
     group = f"test-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -92,7 +92,23 @@ def _jobs_run(spark, action):
         sc._jsc.clearJobGroup()
     # job events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_run(spark, action):
+    """(result, number of Spark jobs) of ``action()``."""
+    out, ids = _job_ids(spark, action)
+    return out, len(ids)
+
+
+def _stage_tasks(spark, job_ids) -> list[int]:
+    """Tasks each stage of the given jobs ran (skipped stages run 0)."""
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        tracker.getStageInfo(sid).numCompletedTasks
+        for jid in job_ids
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
 
 
 def test_bsp_bc_comes_back_materialised(spark):
@@ -188,6 +204,67 @@ def test_csr_default_sources_stay_distributed(spark):
         )
     finally:
         art.cleanup()
+
+
+def test_csr_job_budget(spark):
+    """The CSR path's Spark jobs, pinned: the artifact write observes its
+    own stats (the dedup stage plus the write), a source list reaches the
+    kernel without a shuffle (the kernel stage plus the checkpoint), and a
+    sources DataFrame adds only its repartition.  The kernel stage is one
+    wave: min(p, |sources|) Python tasks beside the zero rows' range
+    slices."""
+    from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
+        betweenness_csr_sweep,
+        prepare_csr,
+    )
+
+    edges = edge_df(spark, er_graph(n=80, p=0.06, seed=3))
+    edges.count()
+    (art, _), jobs = _jobs_run(spark, lambda: prepare_csr(spark, edges))
+    try:
+        assert jobs <= 2, jobs
+        p = spark.sparkContext.defaultParallelism
+        zero_slices = spark.range(art.n).rdd.getNumPartitions()
+        for sources in ([0, 7, 21], list(range(64))):
+            res, ids = _job_ids(spark, lambda: betweenness_csr_sweep(spark, art, sources))
+            assert res.supersteps == len(sources)
+            assert len(ids) <= 2, (len(sources), len(ids))
+            assert max(_stage_tasks(spark, ids)) == min(p, len(sources)) + zero_slices
+        sources_df = spark.createDataFrame([(0,), (7,), (21,)], "source long")
+        res, jobs = _jobs_run(spark, lambda: betweenness_csr_sweep(spark, art, sources_df))
+        assert res.supersteps == 3
+        assert jobs <= 3, jobs
+    finally:
+        art.cleanup()
+
+
+def test_csr_sweeps_score_isolated_ids(spark):
+    """Every id 0..n-1 scores, one that no edge touches included: vertex 3
+    of a path on {0, 1, 2, 4} comes back with 0.0 from the unweighted and
+    the weighted sweep alike."""
+    from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
+        betweenness_csr_sweep,
+        prepare_csr,
+    )
+    from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness_weighted import (
+        betweenness_weighted_csr_sweep,
+        prepare_csr_weighted,
+    )
+
+    edges = [(0, 1), (1, 2), (2, 4)]
+    want = {0: 0.0, 1: 2.0, 2: 2.0, 3: 0.0, 4: 0.0}
+    wdf = spark.createDataFrame([(u, v, 1) for u, v in edges], "src long, dst long, w long")
+    for prepare, sweep, df in (
+        (prepare_csr, betweenness_csr_sweep, edge_df(spark, edges)),
+        (prepare_csr_weighted, betweenness_weighted_csr_sweep, wdf),
+    ):
+        art, sources = prepare(spark, df)
+        try:
+            got = df_to_dict(sweep(spark, art, sources).bc, "vertex", "bc")
+        finally:
+            art.cleanup()
+        assert set(got) == set(want)
+        assert_scores_close(got, want)
 
 
 def test_source_sampling_partial_sums_agree(spark):
