@@ -5,14 +5,15 @@ Two interchangeable implementations, cross-checked in tests:
 ``betweenness_bsp``
     The north_star formulation: BSP-superstep multi-source BFS frontier
     expansion + reverse-order dependency accumulation as **iterative
-    DataFrame joins**.  The forward phase is ``bfs.bfs_levels``, the level
-    loop ``bfs_distances`` shares.  State is keyed by (source, vertex); one
-    BFS level == one superstep == one checkpoint job wave (shuffle = the
-    reference's bsp_put/bsp_send message exchange, materialization =
-    bsp_sync), and the counts the loop needs are observed on that job, not
-    computed by extra actions.  The backward phase pushes too: each row of
-    level d+1 sends ``(1 + delta) / sigma`` over its in-edges and one
-    combining aggregate keeps what reaches level d.  The edge table is
+    DataFrame joins**, both phases on ``superstep_loop``: the forward phase
+    is ``bfs.bfs_levels``, and the backward phase runs the stored levels in
+    reverse.  State is keyed by (source, vertex); one BFS level == one
+    superstep == one checkpoint job wave (shuffle = the reference's
+    bsp_put/bsp_send message exchange, the loop's barrier = bsp_sync), and
+    the counts a level needs are observed on that job.  The backward phase
+    pushes too: each row of level d+1 sends ``(1 + delta) / sigma`` over
+    its in-edges and one combining aggregate keeps what reaches level d.
+    The edge table is
     hash-partitioned by src once and persisted; small frontiers are
     broadcast to turn the frontier×edges join into a broadcast join.
 
@@ -42,6 +43,7 @@ from __future__ import annotations
 import tempfile
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -55,6 +57,7 @@ from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import prepar
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
 @dataclass
@@ -100,6 +103,53 @@ def _source_batches(vertices: DataFrame, sources, batch_size: int):
 # ---------------------------------------------------------------------------
 # Pure-DataFrame BSP implementation
 # ---------------------------------------------------------------------------
+
+def _dependencies(levels: list[DataFrame], sizes: list[int], e_in: DataFrame) -> list[DataFrame]:
+    """The forward ``levels`` with Brandes' ``delta``, deepest first, from
+    one ``superstep_loop`` run whose step records each level it is handed.
+    Its initial state is step 0 on the deepest level (delta 0 there), so
+    the loop's initial barrier already computes the first backward level."""
+    deepest = levels[-1].withColumn("delta", F.lit(0.0))
+    if len(levels) == 1:
+        return [deepest]
+    deltas: list[DataFrame] = []
+
+    # Level d+1 pushes (1 + delta_w) / sigma_w to its in-neighbours; of
+    # those, only level-d rows are its BFS parents, so keeping the groups
+    # that hold a level-d row gives delta_v = sigma_v * sum (Brandes).
+    def step(nxt: DataFrame, k: int) -> DataFrame:
+        deltas.append(nxt)
+        d = len(levels) - 2 - k
+        f = F.broadcast(nxt) if sizes[d + 1] <= _BROADCAST_FRONTIER_MAX else nxt
+        pushed = f.join(e_in, f.vertex == e_in.src).select(
+            "source",
+            e_in.dst.alias("vertex"),
+            ((F.lit(1.0) + f.delta) / f.sigma).alias("_c"),
+        )
+        return (
+            levels[d].withColumn("_c", F.lit(0.0))
+            .unionByName(pushed, allowMissingColumns=True)
+            .groupBy("source", "vertex")
+            .agg(
+                F.max("dist").alias("dist"),
+                F.max("sigma").alias("sigma"),
+                F.sum("_c").alias("_c"),
+            )
+            .where(F.col("dist").isNotNull())
+            .select(
+                "source",
+                "vertex",
+                "dist",
+                "sigma",
+                (F.col("sigma") * F.col("_c")).alias("delta"),
+            )
+        )
+
+    run = superstep_loop(
+        deepest.sparkSession, step(deepest, 0), step, algo="brandes", max_supersteps=len(levels) - 2
+    )
+    return deltas + [run.state]
+
 
 def betweenness_bsp(
     spark: SparkSession,
@@ -157,43 +207,10 @@ def betweenness_bsp(
         total_edges_traversed += messages
 
         # ---- backward phase: reverse-order dependency accumulation ----
-        # Level d+1 pushes (1 + delta_w) / sigma_w to its in-neighbours; of
-        # those, only level-d rows are its BFS parents, so keeping the groups
-        # that hold a level-d row gives delta_v = sigma_v * sum (Brandes).
-        deltas = [levels[-1].withColumn("delta", F.lit(0.0))]
-        for dd in range(len(levels) - 2, -1, -1):
-            nxt = deltas[-1]
-            f = F.broadcast(nxt) if sizes[dd + 1] <= _BROADCAST_FRONTIER_MAX else nxt
-            pushed = f.join(e_in, f.vertex == e_in.src).select(
-                "source",
-                e_in.dst.alias("vertex"),
-                ((F.lit(1.0) + f.delta) / f.sigma).alias("_c"),
-            )
-            deltas.append(
-                _checkpoint(
-                    levels[dd].withColumn("_c", F.lit(0.0))
-                    .unionByName(pushed, allowMissingColumns=True)
-                    .groupBy("source", "vertex")
-                    .agg(
-                        F.max("dist").alias("dist"),
-                        F.max("sigma").alias("sigma"),
-                        F.sum("_c").alias("_c"),
-                    )
-                    .where(F.col("dist").isNotNull())
-                    .select(
-                        "source",
-                        "vertex",
-                        "dist",
-                        "sigma",
-                        (F.col("sigma") * F.col("_c")).alias("delta"),
-                    )
-                )
-            )
-            total_steps += 1
+        deltas = _dependencies(levels, sizes, e_in)
+        total_steps += len(deltas) - 1
 
-        all_state = deltas[0]
-        for part in deltas[1:]:
-            all_state = all_state.unionByName(part)
+        all_state = reduce(DataFrame.unionByName, deltas)
         batch_bc = all_state.where(F.col("vertex") != F.col("source")).select(
             "vertex", F.col("delta").alias("bc")
         )

@@ -1,19 +1,22 @@
 """Multi-source BFS — the reference's per-source ``dist[]`` array as a
-standalone operator (SURVEY.md §2 A6/A8/A9 surfaced directly), and the one
-BFS level loop in the package.
+standalone operator (SURVEY.md §2 A6/A8/A9 surfaced directly).
 
-``bfs_levels`` is that loop; ``bfs_distances`` projects its levels to
-distances and ``betweenness.betweenness_bsp`` runs its forward phase on
-them.  One BFS level == one superstep == one checkpoint job wave: the
-frontier×edges hash join is the message exchange, one combining aggregate
-drops the already-visited vertices, and the level's eager checkpoint is the
-barrier.  The counts the loop steers by (messages sent, level rows) are
-``DataFrame.observe`` metrics of that same job, so no level runs a second
-action.  Small frontiers are broadcast.  State is keyed by (source, vertex)
-so a batch of sources advances in the same wave of jobs.
+``bfs_levels`` runs the BFS levels on ``plans/superstep.py::superstep_loop``;
+``bfs_distances`` projects its levels to distances and
+``betweenness.betweenness_bsp`` runs its forward phase on them.  One BFS
+level == one superstep == one checkpoint job wave: the frontier×edges hash
+join is the message exchange, one combining aggregate drops the
+already-visited vertices, and the loop's barrier is the level's
+checkpoint.  The counts the level steers by (messages sent, level rows)
+are ``DataFrame.observe`` metrics of that same job, so no level runs a
+second action.  Small frontiers are broadcast.  State is keyed by (source,
+vertex) so a batch of sources advances in the same wave of jobs.
 """
 
 from __future__ import annotations
+
+import sys
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -21,8 +24,7 @@ from pyspark.sql import functions as F
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import _traversal_pairs
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import IncrementalVisited
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 _BROADCAST_FRONTIER_MAX = 500_000  # rows; below this, hint broadcast of the frontier
 
@@ -63,6 +65,27 @@ def _observed_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+_FOLD_EVERY = 8  # pending levels IncrementalVisited holds before folding
+
+
+class IncrementalVisited:
+    """A BFS's visited (source, vertex) rows: the marker rows each level's
+    combining aggregate drops.  One folded base plus at most ``_FOLD_EVERY``
+    checkpointed levels, folded into one checkpoint when more arrive, keeps
+    a level's plan O(1) at any depth (re-unioning every level is O(depth²))."""
+
+    def __init__(self):
+        self._parts: list[DataFrame] = []
+
+    def df(self) -> DataFrame:
+        return reduce(DataFrame.unionByName, self._parts)
+
+    def add(self, level: DataFrame) -> None:
+        self._parts.append(level.select("source", "vertex"))
+        if len(self._parts) > _FOLD_EVERY:
+            self._parts = [self.df().localCheckpoint(eager=True)]
+
+
 def bfs_levels(
     start: DataFrame, e: DataFrame, max_depth: int | None = None
 ) -> tuple[list[DataFrame], list[int], int]:
@@ -77,44 +100,51 @@ def bfs_levels(
     which is not returned unless it is the start, or after ``max_depth``
     levels.
 
-    A level is one job wave: the messages and the visited set (as marker
-    rows) meet in one ``groupBy("source", "vertex")`` that sums sigma
-    (combining messages map-side) and keeps the groups without a marker.
-    Both counts are observed on the level's eager checkpoint.
+    The loop's state is the frontier; the step records each level it is
+    handed.  A level is one job wave: the messages and the visited set (as
+    marker rows) meet in one ``groupBy("source", "vertex")`` that sums sigma
+    (combining messages map-side) and keeps the groups without a marker;
+    its barrier job observes the level's rows and the messages sent.
     """
     start, obs = _observed_rows(start)
-    frontier = start.localCheckpoint(eager=True).transform(guard_stats)
-    levels = [frontier]
-    sizes = [obs.get["rows"]]
-    messages = 0
-    # O(1)-deep marker source at any depth (vs re-unioning all levels
-    # every superstep = O(depth²) total scans on long-diameter graphs).
-    visited = IncrementalVisited(frontier, ["source", "vertex"])
-    d = 0
-    while sizes[-1] and (max_depth is None or d < max_depth):
-        d += 1
-        f = F.broadcast(frontier) if sizes[-1] <= _BROADCAST_FRONTIER_MAX else frontier
-        msgs, sent = _observed_rows(
+    reached: list[int] = []  # levels 1.., counted on the loop's own barrier
+    sent: list[Observation] = []
+    levels: list[DataFrame] = []
+    visited = IncrementalVisited()
+
+    def stop(_, n: int) -> bool:
+        reached.append(n)
+        return n == 0
+
+    def expand(frontier: DataFrame, d: int) -> DataFrame:
+        levels.append(frontier)
+        visited.add(frontier)
+        n = reached[-1] if reached else obs.get["rows"]
+        if n == 0:  # an empty start is never expanded
+            return frontier
+        f = F.broadcast(frontier) if n <= _BROADCAST_FRONTIER_MAX else frontier
+        msgs, msgs_obs = _observed_rows(
             f.join(e, f.vertex == e.src).select("source", e.dst.alias("vertex"), "sigma")
         )
+        sent.append(msgs_obs)
         marks = visited.df().withColumn("seen", F.lit(True))
-        level, reached = _observed_rows(
+        return (
             msgs.unionByName(marks, allowMissingColumns=True)
             .groupBy("source", "vertex")
             .agg(F.sum("sigma").alias("sigma"), F.max("seen").alias("seen"))
             .where(F.col("seen").isNull())
             .select("source", "vertex", F.lit(d).alias("dist"), "sigma")
         )
-        level = level.localCheckpoint(eager=True).transform(guard_stats)
-        messages += sent.get["rows"]
-        # no task produced a row: the level is empty
-        if reached.get["rows"] == 0:
-            break
-        levels.append(level)
-        sizes.append(reached.get["rows"])
-        visited.add(level)
-        frontier = level
-    return levels, sizes, messages
+
+    run = superstep_loop(
+        start.sparkSession, start, expand, algo="bfs",
+        max_supersteps=sys.maxsize if max_depth is None else max_depth,
+        converge_on=F.count(F.lit(1)), converged_fn=stop,
+    )
+    if not run.converged:  # stopped at max_depth, on a level not yet recorded
+        levels.append(run.state)
+    sizes = ([obs.get["rows"]] + reached)[: len(levels)]
+    return levels, sizes, sum(m.get["rows"] for m in sent)
 
 
 def bfs_distances(
@@ -136,9 +166,7 @@ def bfs_distances(
         F.lit(1.0).alias("sigma"),
     )
     levels, _, _ = bfs_levels(start, e, max_depth)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
+    out = reduce(DataFrame.unionByName, levels)
     e.unpersist()
     return out.drop("sigma")
 
@@ -177,6 +205,26 @@ def double_sweep_diameter(
     )
 
 
+def _closeness(d: DataFrame, edges: DataFrame, wf_improved: bool) -> DataFrame:
+    """``(vertex, reached, closeness)`` from the ``(source, vertex, dist)``
+    distances ``d`` over the graph ``edges``: reached/Σdist per vertex,
+    scaled by reached/(n - 1) when ``wf_improved`` (Wasserman-Faust)."""
+    n = (
+        edges.select(F.col("src").alias("v"))
+        .unionByName(edges.select(F.col("dst").alias("v")))
+        .distinct()
+        .count()
+    )
+    agg = d.where(F.col("dist") > 0).groupBy("vertex").agg(
+        F.count(F.lit(1)).alias("reached"),
+        F.sum("dist").alias("_s"),
+    )
+    base = F.col("reached").cast("double") / F.col("_s").cast("double")
+    if wf_improved and n > 1:
+        base = base * (F.col("reached").cast("double") / F.lit(float(n - 1)))
+    return agg.select("vertex", "reached", base.alias("closeness"))
+
+
 def closeness_sampled(
     spark: SparkSession,
     edges: DataFrame,
@@ -208,21 +256,7 @@ def closeness_sampled(
     d = bfs_distances(
         spark, edges, sources, directed=directed, num_partitions=num_partitions
     )
-    n = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
-        .count()
-    )
-    pos = d.where(F.col("dist") > 0)
-    agg = pos.groupBy("vertex").agg(
-        F.count(F.lit(1)).alias("reached"),
-        F.sum("dist").alias("_s"),
-    )
-    base = F.col("reached").cast("double") / F.col("_s").cast("double")
-    if wf_improved and n > 1:
-        base = base * (F.col("reached").cast("double") / F.lit(float(n - 1)))
-    return agg.select("vertex", "reached", base.alias("closeness"))
+    return _closeness(d, edges, wf_improved)
 
 
 def shortest_path(
@@ -352,18 +386,4 @@ def closeness_weighted_sampled(
         max_hops=max_hops,
         delta_width=delta_width,
     )
-    n = (
-        weighted_edges.select(F.col("src").alias("v"))
-        .unionByName(weighted_edges.select(F.col("dst").alias("v")))
-        .distinct()
-        .count()
-    )
-    pos = d.where(F.col("dist") > 0)
-    agg = pos.groupBy("vertex").agg(
-        F.count(F.lit(1)).alias("reached"),
-        F.sum("dist").alias("_s"),
-    )
-    base = F.col("reached").cast("double") / F.col("_s").cast("double")
-    if wf_improved and n > 1:
-        base = base * (F.col("reached").cast("double") / F.lit(float(n - 1)))
-    return agg.select("vertex", "reached", base.alias("closeness"))
+    return _closeness(d, weighted_edges, wf_improved)

@@ -11,11 +11,10 @@ it: connected components (hash-min and star contraction), label
 propagation, one-level Louvain, PageRank, Katz, eigenvector centrality,
 HITS, SALSA, SimRank, SSSP, k-core, coreness, k-truss, WL refinement,
 random walks (uniform and node2vec), k-hop feature means, Luby MIS,
-Jones-Plassmann coloring, greedy matching, ANF sketches and DAG
-longest-path layers.  Not on it: the BFS level loop (``operators.bfs``,
-shared by BFS and BSP Brandes) and BSP Brandes' backward phase, which
-keep every level rather than one state; weighted Brandes; Boruvka MST,
-whose rounds each run a CC; SCC, whose loops nest; and k-means.
+Jones-Plassmann coloring, greedy matching, ANF sketches, DAG
+longest-path layers, BFS levels and BSP Brandes' backward phase (steps
+that record every level they are handed).  Not on it: weighted Brandes;
+Boruvka MST, whose rounds each run a CC; SCC, whose loops nest; k-means.
 
 * **Lineage control** — iterative DataFrame loops grow the logical plan
   without bound; every superstep either writes state to parquet and reads it
@@ -355,44 +354,6 @@ def superstep_loop(
         converged=converged,
         metrics=metrics,
     )
-
-
-_FOLD_EVERY = 8  # pending levels IncrementalVisited holds before folding
-
-
-class IncrementalVisited:
-    """Incrementally-grown membership set for frontier anti-joins.
-
-    BFS-style loops must anti-join each new frontier against *everything seen
-    so far*.  Re-unioning all L prior levels every superstep costs O(L) plan
-    nodes and cached scans per step — O(L²) total, a scale-killer on
-    long-diameter graphs (road networks, chains).  This keeps one
-    materialized ``base`` plus at most ``_FOLD_EVERY`` pending level
-    DataFrames (which the caller has already checkpointed, so appending is
-    free); every ``_FOLD_EVERY`` appends the union folds into a fresh
-    checkpointed base.  Per-superstep plan size and scan count are then
-    O(_FOLD_EVERY) = O(1) regardless of depth, and fold work totals
-    O(L/_FOLD_EVERY) extra materializations.
-    """
-
-    def __init__(self, first: DataFrame, cols: list[str]):
-        self._cols = cols
-        self._base = first.select(*cols)
-        self._pending: list[DataFrame] = []
-
-    def df(self) -> DataFrame:
-        """The current membership set (anti-join target)."""
-        out = self._base
-        for lv in self._pending:
-            out = out.unionByName(lv.select(*self._cols))
-        return out
-
-    def add(self, level: DataFrame) -> None:
-        """Append a newly-materialized frontier; fold when due."""
-        self._pending.append(level)
-        if len(self._pending) >= _FOLD_EVERY:
-            self._base = self.df().localCheckpoint(eager=True)
-            self._pending = []
 
 
 def latest_checkpoint(

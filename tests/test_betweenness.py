@@ -80,6 +80,28 @@ def test_bsp_traversal_counters(spark):
     assert bsp.edges_traversed == csr.edges_traversed == len(sources) * 2 * len(edges)
 
 
+def test_bsp_deeper_than_the_visited_fold(spark):
+    """P20 runs 19 levels deep, past two folds of the BFS visited set:
+    distances stay exact, bc(i) = i * (19 - i), and the counters cover 20
+    forward expansions plus 19 backward levels, each of the 20 sources
+    sending one message per out-edge (38) of every vertex."""
+    from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import (
+        _FOLD_EVERY,
+        bfs_distances,
+    )
+
+    n = 20
+    assert n - 1 > 2 * _FOLD_EVERY
+    edges = edge_df(spark, path_graph_edges(n))
+    got = {r.vertex: r.dist for r in bfs_distances(spark, edges, [0]).collect()}
+    assert got == {v: v for v in range(n)}
+    res = betweenness_bsp(spark, edges)
+    want = {i: float(i * (n - 1 - i)) for i in range(n)}
+    assert_scores_close(df_to_dict(res.bc, "vertex", "bc"), want)
+    assert res.supersteps == 39
+    assert res.edges_traversed == 760
+
+
 def _job_ids(spark, action):
     """(result, ids of the Spark jobs) of ``action()``, found through a job
     group and the status tracker."""

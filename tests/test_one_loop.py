@@ -2,13 +2,14 @@
 
 A round loop of its own shows in the source as a ``for`` or ``while`` whose
 body materializes state: it calls ``localCheckpoint``, ``checkpoint`` or
-betweenness' ``_checkpoint``.  The scan finds every such loop in
-``operators/`` and names the top-level function that holds it.
+betweenness' ``_checkpoint``.  The scan finds every such loop in the
+package, named by its module and the top-level function that holds it.
 
-``HAND_ROLLED`` names the functions that keep their own loop today: the BFS
-level loop and BSP Brandes' backward phase keep every level rather than one
-state, Boruvka runs a CC inside each round, SCC nests its loops, and k-means
-is off the graph path.  The list may only shrink.
+``HAND_ROLLED`` names the functions that keep their own loop today: BSP
+Brandes folds its score accumulator once per source batch (its BFS levels
+and backward phase run on the loop), weighted Brandes keeps its frontier
+loop, Boruvka runs a CC inside each round, SCC nests its loops, and
+k-means is off the graph path.  The list may only shrink.
 """
 from __future__ import annotations
 
@@ -16,11 +17,10 @@ import ast
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OPERATORS = os.path.join(ROOT, "parallel_betweenness_centrality_using_bsp_spark", "operators")
+PACKAGE = os.path.join(ROOT, "parallel_betweenness_centrality_using_bsp_spark")
 MATERIALIZE = {"localCheckpoint", "checkpoint", "_checkpoint"}
 
 HAND_ROLLED = {
-    "bfs.bfs_levels",
     "betweenness.betweenness_bsp",
     "betweenness_weighted.betweenness_weighted",
     "mst.boruvka_forest",
@@ -47,10 +47,11 @@ def _materializes(loop: ast.For | ast.While) -> bool:
 
 def _hand_rolled_loops() -> set[str]:
     found = set()
-    for fname in sorted(os.listdir(OPERATORS)):
-        if not fname.endswith(".py"):
-            continue
-        path = os.path.join(OPERATORS, fname)
+    paths = sorted(
+        os.path.join(d, f) for d, _, files in os.walk(PACKAGE) for f in files if f.endswith(".py")
+    )
+    for path in paths:
+        fname = os.path.basename(path)
         with open(path) as fh:
             tree = ast.parse(fh.read(), path)
         for top in tree.body:
