@@ -3140,8 +3140,9 @@ def graph_betweenness_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     source sample {v < 8} — ORACLE-GATED: the DuckDB twin computes
     weighted distances by a cost-capped recursive walk, the shortest-path
     DAG by the dist(u)+w = dist(v) certificate, then hop-unrolled DP for
-    sigma (forward) and delta (backward) — exactly the three fixpoints
-    ``betweenness_weighted`` runs as BSP supersteps.  The allclose-1e-6
+    sigma (forward) and delta (backward) — the quantities
+    ``betweenness_weighted`` computes in two superstep-loop runs (one
+    fused dist+sigma fixpoint, one backward delta sweep).  The allclose-1e-6
     oracle vs ``networkx.betweenness_centrality(weight=...)`` on arbitrary
     graphs lives in tests/test_betweenness.py."""
     from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness_weighted import (

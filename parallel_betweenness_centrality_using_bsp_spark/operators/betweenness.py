@@ -16,6 +16,10 @@ Two interchangeable implementations, cross-checked in tests:
     The edge table is
     hash-partitioned by src once and persisted; small frontiers are
     broadcast to turn the frontier×edges join into a broadcast join.
+    Sources run in batches through ``_brandes_over_batches``, the one
+    driver it shares with weighted Brandes
+    (``betweenness_weighted.betweenness_weighted``): it streams the
+    batches, folds each batch's deltas into the scores and scales them.
 
 ``betweenness_csr``
     The fast path when the graph (not the state) fits per executor:
@@ -44,6 +48,7 @@ import tempfile
 import time
 from dataclasses import dataclass
 from functools import reduce
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -55,6 +60,7 @@ from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _obser
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_levels
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import prepare_adjacency
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
@@ -151,6 +157,65 @@ def _dependencies(levels: list[DataFrame], sizes: list[int], e_in: DataFrame) ->
     return deltas + [run.state]
 
 
+def _brandes_over_batches(
+    spark: SparkSession,
+    e: DataFrame,
+    sources: list[int] | None,
+    batch_size: int,
+    directed: bool,
+    estimate: bool,
+    run_batch: Callable[[list[int]], tuple[DataFrame, int, int]],
+    return_state: bool = False,
+) -> BetweennessResult:
+    """Brandes over the edge table ``e``, one source batch at a time: the
+    driver both BSP Brandes share.
+
+    ``run_batch(batch) -> (state, supersteps, edges_traversed)`` runs one
+    batch; ``state`` holds ``(source, vertex, delta)`` for every vertex the
+    batch reached.  Each batch's deltas fold into the score accumulator,
+    which starts as one zero row per endpoint of ``e`` so that every vertex
+    scores (the first fold's ``groupBy`` collapses the duplicates).
+    ``estimate=True`` scales the sums by n/|sources| (Brandes & Pich)."""
+    t0 = time.monotonic()
+    ends = endpoints(e)
+    # the default source set streams every vertex, so it needs them distinct
+    vertices = ends.distinct() if sources is None else None
+    bc_acc = ends.select("vertex", F.lit(0.0).alias("bc"))
+    state_acc: DataFrame | None = None
+    n_sources = 0
+    total_steps = 0
+    total_edges_traversed = 0
+
+    for batch in _source_batches(vertices, sources, batch_size):
+        n_sources += len(batch)
+        state, steps, traversed = run_batch(batch)
+        total_steps += steps
+        total_edges_traversed += traversed
+        batch_bc = state.where(F.col("vertex") != F.col("source")).select(
+            "vertex", F.col("delta").alias("bc")
+        )
+        bc_acc = _checkpoint(
+            bc_acc.unionByName(batch_bc).groupBy("vertex").agg(F.sum("bc").alias("bc"))
+        )
+        if return_state:
+            state_acc = _checkpoint(
+                state if state_acc is None else state_acc.unionByName(state)
+            )
+
+    if not n_sources:  # no batch ran to collapse the endpoint rows
+        bc_acc = _checkpoint(bc_acc.distinct())
+    scale = 1.0 if directed else 0.5
+    if estimate:
+        scale *= bc_acc.count() / max(n_sources, 1)
+    return BetweennessResult(
+        bc=bc_acc.select("vertex", (F.col("bc") * F.lit(scale)).alias("bc")),
+        supersteps=total_steps,
+        edges_traversed=total_edges_traversed,
+        wall_s=time.monotonic() - t0,
+        state=state_acc,
+    )
+
+
 def betweenness_bsp(
     spark: SparkSession,
     edges: DataFrame,
@@ -169,29 +234,14 @@ def betweenness_bsp(
     Brandes & Pich (2007) estimator of FULL betweenness from a source
     sample (unbiased for a uniform sample; identical to exact when the
     sample is every vertex)."""
-    t0 = time.monotonic()
     e = prepare_adjacency(spark, edges, directed, num_partitions)
     # the backward phase sends along in-edges: the same table when undirected
     e_in = e
     if directed:
         reversed_edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         e_in = prepare_adjacency(spark, reversed_edges, True, num_partitions)
-    endpoints = e.select(F.col("src").alias("vertex")).unionByName(
-        e.select(F.col("dst").alias("vertex"))
-    )
-    # the default source set streams every vertex, so it needs them distinct
-    vertices = endpoints.distinct() if sources is None else None
-    # every vertex scores, 0.0 unless a batch credits it; the first batch's
-    # groupBy collapses the duplicate endpoint rows
-    bc_acc = endpoints.select("vertex", F.lit(0.0).alias("bc"))
-    state_acc: DataFrame | None = None
-    n_sources = 0
-    total_steps = 0
-    total_edges_traversed = 0
 
-    for batch in _source_batches(vertices, sources, batch_size):
-        n_sources += len(batch)
-
+    def run_batch(batch: list[int]) -> tuple[DataFrame, int, int]:
         # ---- forward phase: multi-source BFS, one level per superstep ----
         levels, sizes, messages = bfs_levels(
             source_frame(spark, batch).select(
@@ -202,41 +252,18 @@ def betweenness_bsp(
             ),
             e,
         )
-        # every level was expanded, the final empty one included
-        total_steps += len(levels)
-        total_edges_traversed += messages
-
         # ---- backward phase: reverse-order dependency accumulation ----
         deltas = _dependencies(levels, sizes, e_in)
-        total_steps += len(deltas) - 1
+        # every forward level was expanded, the final empty one included
+        steps = len(levels) + len(deltas) - 1
+        return reduce(DataFrame.unionByName, deltas), steps, messages
 
-        all_state = reduce(DataFrame.unionByName, deltas)
-        batch_bc = all_state.where(F.col("vertex") != F.col("source")).select(
-            "vertex", F.col("delta").alias("bc")
-        )
-        bc_acc = _checkpoint(
-            bc_acc.unionByName(batch_bc).groupBy("vertex").agg(F.sum("bc").alias("bc"))
-        )
-        if return_state:
-            state_acc = _checkpoint(
-                all_state if state_acc is None else state_acc.unionByName(all_state)
-            )
-
-    if not n_sources:  # no batch ran to collapse the endpoint rows
-        bc_acc = _checkpoint(bc_acc.distinct())
-    scale = 1.0 if directed else 0.5
-    if estimate:
-        scale *= bc_acc.count() / max(n_sources, 1)
-    bc = bc_acc.select("vertex", (F.col("bc") * F.lit(scale)).alias("bc"))
+    res = _brandes_over_batches(
+        spark, e, sources, batch_size, directed, estimate, run_batch, return_state
+    )
     e.unpersist()
     e_in.unpersist()
-    return BetweennessResult(
-        bc=bc,
-        supersteps=total_steps,
-        edges_traversed=total_edges_traversed,
-        wall_s=time.monotonic() - t0,
-        state=state_acc,
-    )
+    return res
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,10 @@ Brandes' algorithm needs, per source s:
                  δ(v) = Σ_{w : v→w on a shortest path} σ(v)/σ(w) · (1 + δ(w)).
 
 A literal distributed Dijkstra would serialize on its priority queue, so
-every phase here is a BSP fixpoint of frontier-driven DataFrame joins —
-the execution shape every other kernel in this engine uses:
+each batch of sources runs two ``plans/superstep.py::superstep_loop``
+runs of frontier-driven DataFrame joins — the execution shape every other
+kernel in this engine uses — and ``betweenness._brandes_over_batches``,
+the batch driver it shares with ``betweenness_bsp``, folds the deltas:
 
 * **fused dist+sigma+depth** (one fixpoint, r5): frontier Bellman–Ford
   relaxation AND the Brandes path-count recurrence propagate in the SAME
@@ -29,11 +31,12 @@ the execution shape every other kernel in this engine uses:
   exact in every engine (the 1e-6/exact twin-oracle rule).
 * **delta**: the recurrence run BACKWARD over the σ-ratio-annotated DAG:
   ``δ_k(v) = Σ_succs σ(v)/σ(w) · (1 + δ_{k-1}(w))`` converges bottom-up
-  in DAG-depth rounds — and the depth is KNOWN (max ``hopd`` from the
-  fused phase), so the sweep runs blind with no per-round convergence
-  check.  No per-distance-value driver loop: a 10^12-file graph has too
-  many distinct distances to enumerate at the driver, while DAG depth is
-  a round count like every other kernel's.
+  in DAG-depth rounds — and the depth is KNOWN (max ``hopd``, observed
+  with the changed-row count on the fused loop's barrier jobs), so the
+  sweep runs blind with no per-round convergence check.  No
+  per-distance-value driver loop: a 10^12-file graph has too many
+  distinct distances to enumerate at the driver, while DAG depth is a
+  round count like every other kernel's.
 
 For graphs whose weight spread makes Bellman-Ford relax far vertices
 early with non-final distances, ``operators.sssp`` offers delta-stepping
@@ -43,13 +46,11 @@ correction wave.
 
 Scale notes: the weighted edge table is min-combined per (src, dst),
 partitioned by src once, persisted; per-round shuffles carry only
-frontier/changed rows keyed (source, vertex).  Sources run in batches like
-``betweenness_bsp``, so state never exceeds |batch| × |V| rows.
+frontier/changed rows keyed (source, vertex).  Sources run in batches,
+so state never exceeds |batch| × |V| rows.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -58,23 +59,19 @@ from pyspark.sql import functions as F
 from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
     BetweennessResult,
     CsrArtifact,
-    _source_batches,
+    _brandes_over_batches,
     csr_sweep,
     write_csr_artifact,
 )
 from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import source_frame
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import _weighted_pairs
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
-def _weighted_pairs(weighted_edges: DataFrame, directed: bool) -> DataFrame:
-    e = weighted_edges.select("src", "dst", F.col("w").cast("long").alias("w"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    # parallel edges keep the MINIMUM weight (only the lightest can lie on a
-    # shortest path; heavier parallels would corrupt sigma if kept)
-    return e.where(F.col("src") != F.col("dst")).groupBy("src", "dst").agg(F.min("w").alias("w"))
+def _long_weights(weighted_edges: DataFrame) -> DataFrame:
+    """``(src, dst, w)`` with ``w`` cast to long (callers reject the
+    weights the cast would change)."""
+    return weighted_edges.select("src", "dst", F.col("w").cast("long").alias("w"))
 
 
 def betweenness_weighted(
@@ -102,7 +99,6 @@ def betweenness_weighted(
     the Brandes-Pich 2007 unbiased estimator, identical to the unweighted
     paths' flag (betweenness.py).
     """
-    t0 = time.monotonic()
     p = num_partitions or spark.sparkContext.defaultParallelism
     # Validate on the POST-CAST value: a fractional weight in (0, 1) passes a
     # raw `w <= 0` check but truncates to 0 under the long cast below,
@@ -119,130 +115,116 @@ def betweenness_weighted(
             "weights (w <= 0 or non-integral w found) — zero or fractional "
             "weights would corrupt shortest-path hop structure"
         )
-    e = _weighted_pairs(weighted_edges, directed).repartition(p, "src").persist()
-    e.count()
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .persist()
-    )
+    # the first job that reads the table fills its cache
+    e = _weighted_pairs(_long_weights(weighted_edges), directed).repartition(p, "src").persist()
+    e_in = e.select(F.col("src").alias("u"), F.col("dst").alias("vertex"), "w")
 
-    total_steps = 0
-    total_edges_traversed = 0
-    n_sources = 0
-    bc_acc: DataFrame | None = None
-
-    # Default all-sources mode streams vertex-id batches via toLocalIterator
-    # (the driver holds one batch, never the id universe) — same discipline
-    # as the unweighted betweenness_bsp.
-    for batch in _source_batches(vertices, sources, batch_size):
-        n_sources += len(batch)
-        src_df = source_frame(spark, batch)
-
-        # ---- fused phase: dist + sigma + DAG-depth in ONE fixpoint ------
-        # r4 ran dist (hop-diameter rounds) THEN sigma (DAG-depth rounds)
-        # as separate fixpoints — ~2·D supersteps before delta even starts.
-        # Here both propagate in the same round: relax distances from the
-        # changed frontier AND recompute the Brandes pred-sum
-        #   σ(v) = Σ_{(u,v): dist(u)+w == dist(v)} σ(u)
-        # for every vertex the frontier can have touched (= the candidate
-        # set — a vertex's σ/depth inputs can only change via an in-edge
-        # from a changed vertex, and those are exactly cand's keys).  The
-        # pred-sum uses the PREVIOUS round's (dist, sigma) at u and the
-        # CURRENT merged dist at v; one round of staleness just retriggers
-        # the recompute (u stays in the change-set), so the fixpoint is the
-        # exact Brandes recurrence — reached ~1-2 rounds after distances
-        # settle instead of a full extra DAG-depth sweep.  ``hopd`` rides
-        # the same max-aggregate (1 + max over qualifying preds): its
-        # fixpoint maximum IS the DAG depth, which phase 3 runs blind for.
-        state = src_df.select(
-            "source",
-            F.col("source").alias("vertex"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1.0).alias("sigma"),
-            F.lit(0).alias("hopd"),
-            F.lit(True).alias("chg"),
-        ).localCheckpoint(eager=True).transform(guard_stats)
-        e_in = e.select(F.col("src").alias("u"), F.col("dst").alias("vertex"), "w")
-        for _ in range(max_hops):
-            frontier = state.where(F.col("chg"))
-            if frontier.isEmpty():
-                break
-            cand = (
-                frontier.join(e, frontier.vertex == e.src)
-                .select(
-                    "source",
-                    e.dst.alias("vertex"),
-                    (F.col("dist") + F.col("w")).alias("cdist"),
-                )
-                .groupBy("source", "vertex")
-                .agg(F.min("cdist").alias("cdist"))
-                .localCheckpoint(eager=True).transform(guard_stats)  # reused twice below
-            )
-            su = state.select(
+    # ---- fused phase: dist + sigma + DAG-depth in ONE fixpoint ----------
+    # r4 ran dist (hop-diameter rounds) THEN sigma (DAG-depth rounds) as
+    # separate fixpoints — ~2·D supersteps before delta even starts.  Here
+    # both propagate in the same round: relax distances from the changed
+    # frontier AND recompute the Brandes pred-sum
+    #   σ(v) = Σ_{(u,v): dist(u)+w == dist(v)} σ(u)
+    # for every vertex the frontier can have touched (= the candidate set —
+    # a vertex's σ/depth inputs can only change via an in-edge from a
+    # changed vertex, and those are exactly cand's keys).  The pred-sum uses
+    # the PREVIOUS round's (dist, sigma) at u and the CURRENT merged dist at
+    # v; one round of staleness just retriggers the recompute (u stays in
+    # the change-set), so the fixpoint is the exact Brandes recurrence —
+    # reached ~1-2 rounds after distances settle instead of a full extra
+    # DAG-depth sweep.  ``hopd`` rides the same max-aggregate (1 + max over
+    # qualifying preds): its fixpoint maximum IS the DAG depth, which the
+    # delta phase runs blind for.
+    def relax(state: DataFrame, _k: int) -> DataFrame:
+        frontier = state.where(F.col("chg"))
+        cand = (
+            frontier.join(e, frontier.vertex == e.src)
+            .select(
                 "source",
-                F.col("vertex").alias("u"),
-                F.col("dist").alias("du"),
-                F.col("sigma").alias("sigma_u"),
-                F.col("hopd").alias("hopd_u"),
+                e.dst.alias("vertex"),
+                (F.col("dist") + F.col("w")).alias("cdist"),
             )
-            sv = state.select(
-                "source",
-                "vertex",
-                F.col("dist").alias("dv_old"),
-                F.col("sigma").alias("sig_old"),
-                F.col("hopd").alias("hopd_old"),
-            )
-            qualify = F.col("du") + F.col("w") == F.col("dv")
-            touched = (
-                cand.join(e_in, "vertex")
-                .join(su, ["source", "u"])
-                .join(sv, ["source", "vertex"], "left")
-                .withColumn("dv", F.least("dv_old", "cdist"))
-                .groupBy("source", "vertex")
-                .agg(
-                    F.first("dv").alias("dist"),
-                    F.first("dv_old").alias("dv_old"),
-                    F.first("sig_old").alias("sig_old"),
-                    F.first("hopd_old").alias("hopd_old"),
-                    F.sum(F.when(qualify, F.col("sigma_u"))).alias("nsig"),
-                    F.max(F.when(qualify, F.col("hopd_u") + 1)).alias("nhopd"),
-                )
-            )
-            is_src = F.col("vertex") == F.col("source")
-            new_sigma = F.when(is_src, F.lit(1.0)).otherwise(
-                F.coalesce("nsig", F.lit(0.0))
-            )
-            new_hopd = F.when(is_src, F.lit(0)).otherwise(
-                F.coalesce("nhopd", F.lit(0))
-            )
-            changed = (
-                ~F.col("dist").eqNullSafe(F.col("dv_old"))
-                | ~new_sigma.eqNullSafe(F.col("sig_old"))
-                | ~new_hopd.eqNullSafe(F.col("hopd_old"))
-            )
-            tfinal = touched.select(
-                "source",
-                "vertex",
-                "dist",
-                new_sigma.alias("sigma"),
-                new_hopd.alias("hopd"),
-                changed.alias("chg"),
-            )
-            untouched = state.join(
-                cand.select("source", "vertex"), ["source", "vertex"], "left_anti"
-            ).select(
-                "source", "vertex", "dist", "sigma", "hopd", F.lit(False).alias("chg")
-            )
-            state = untouched.unionByName(tfinal).localCheckpoint(eager=True).transform(guard_stats)
-            total_steps += 1
-        dist = state.select("source", "vertex", "dist")
-        dag_depth = int(
-            state.agg(F.coalesce(F.max("hopd"), F.lit(0)).alias("d")).collect()[0]["d"]
+            .groupBy("source", "vertex")
+            .agg(F.min("cdist").alias("cdist"))
         )
+        su = state.select(
+            "source",
+            F.col("vertex").alias("u"),
+            F.col("dist").alias("du"),
+            F.col("sigma").alias("sigma_u"),
+            F.col("hopd").alias("hopd_u"),
+        )
+        sv = state.select(
+            "source",
+            "vertex",
+            F.col("dist").alias("dv_old"),
+            F.col("sigma").alias("sig_old"),
+            F.col("hopd").alias("hopd_old"),
+        )
+        qualify = F.col("du") + F.col("w") == F.col("dv")
+        touched = (
+            cand.join(e_in, "vertex")
+            .join(su, ["source", "u"])
+            .join(sv, ["source", "vertex"], "left")
+            .withColumn("dv", F.least("dv_old", "cdist"))
+            .groupBy("source", "vertex")
+            .agg(
+                F.first("dv").alias("dist"),
+                F.first("dv_old").alias("dv_old"),
+                F.first("sig_old").alias("sig_old"),
+                F.first("hopd_old").alias("hopd_old"),
+                F.sum(F.when(qualify, F.col("sigma_u"))).alias("nsig"),
+                F.max(F.when(qualify, F.col("hopd_u") + 1)).alias("nhopd"),
+            )
+        )
+        is_src = F.col("vertex") == F.col("source")
+        new_sigma = F.when(is_src, F.lit(1.0)).otherwise(F.coalesce("nsig", F.lit(0.0)))
+        new_hopd = F.when(is_src, F.lit(0)).otherwise(F.coalesce("nhopd", F.lit(0)))
+        changed = (
+            ~F.col("dist").eqNullSafe(F.col("dv_old"))
+            | ~new_sigma.eqNullSafe(F.col("sig_old"))
+            | ~new_hopd.eqNullSafe(F.col("hopd_old"))
+        )
+        tfinal = touched.select(
+            "source",
+            "vertex",
+            "dist",
+            new_sigma.alias("sigma"),
+            new_hopd.alias("hopd"),
+            changed.alias("chg"),
+        )
+        untouched = state.join(
+            cand.select("source", "vertex"), ["source", "vertex"], "left_anti"
+        ).select("source", "vertex", "dist", "sigma", "hopd", F.lit(False).alias("chg"))
+        return untouched.unionByName(tfinal)
 
+    def run_batch(batch: list[int]) -> tuple[DataFrame, int, int]:
+        # each barrier observes (changed rows, max hopd): the last one seen
+        # gives the final state's DAG depth without an aggregate job
+        depth = [0]
+
+        def settled(_, value) -> bool:
+            changed, depth[0] = value
+            return changed == 0
+
+        fwd = superstep_loop(
+            spark,
+            source_frame(spark, batch).select(
+                "source",
+                F.col("source").alias("vertex"),
+                F.lit(0).cast("long").alias("dist"),
+                F.lit(1.0).alias("sigma"),
+                F.lit(0).alias("hopd"),
+                F.lit(True).alias("chg"),
+            ),
+            relax,
+            algo="brandes_weighted",
+            max_supersteps=max_hops,
+            converge_on=F.struct(F.count_if("chg"), F.coalesce(F.max("hopd"), F.lit(0))),
+            converged_fn=settled,
+        )
         # ---- shortest-path DAG with σ-ratios: dist(u) + w == dist(v) ----
+        dist = fwd.state.select("source", "vertex", "dist")
         du = dist.select("source", F.col("vertex").alias("src"), F.col("dist").alias("du"))
         dv = dist.select("source", F.col("vertex").alias("dst"), F.col("dist").alias("dv"))
         dag = (
@@ -253,27 +235,22 @@ def betweenness_weighted(
             .repartition(p, "source", "dst")
             .persist()
         )
-        total_edges_traversed += dag.count()
-        sigma = state.select("source", "vertex", "sigma")
+        traversed = dag.count()
 
-        # ---- phase 3: delta fixpoint, backward over the DAG -------------
+        # ---- delta phase, backward over the DAG -------------------------
         # Round count is KNOWN, not detected: the fused phase's ``hopd``
         # maximum IS the DAG depth, and delta propagated leaf-up is
-        # stationary after depth-1 rounds (the deepest vertices' delta=0
-        # is already final; each round finalizes one level up).  Running
-        # them blind drops the per-round convergence join + driver sync.
+        # stationary after depth-1 rounds (the deepest vertices' delta=0 is
+        # already final; each round finalizes one level up).  Running them
+        # blind drops the per-round convergence test.
         #
         # The σ-ratio on each DAG edge never changes across delta rounds —
         # join sigma into the DAG ONCE (σ(u)/σ(w) per edge, persisted) so
         # the per-round plan is one join + one hash agg + the state merge,
         # instead of re-joining sigma at both endpoints every round.
-        sv = sigma.select("source", "vertex", "sigma")
-        su = sv.select(
-            "source", F.col("vertex").alias("src"), F.col("sigma").alias("sigma_u")
-        )
-        sw = sv.select(
-            "source", F.col("vertex").alias("dst"), F.col("sigma").alias("sigma_w")
-        )
+        sv = fwd.state.select("source", "vertex", "sigma")
+        su = sv.select("source", F.col("vertex").alias("src"), F.col("sigma").alias("sigma_u"))
+        sw = sv.select("source", F.col("vertex").alias("dst"), F.col("sigma").alias("sigma_w"))
         dag_r = (
             dag.join(su, ["source", "src"])
             .join(sw, ["source", "dst"])
@@ -286,62 +263,38 @@ def betweenness_weighted(
             .repartition(p, "source", "dst")
             .persist()
         )
-        delta = sv.select(
-            "source", "vertex", F.lit(0.0).alias("delta")
-        ).localCheckpoint(eager=True).transform(guard_stats)
-        for _ in range(min(max(dag_depth - 1, 0), max_hops)):
-            # δ(v) = Σ_{w succ} σ(v)/σ(w) · (1 + δ(w)) — recomputed in full
-            # each round; stationary once rounds reach the DAG depth
+
+        # δ(v) = Σ_{w succ} σ(v)/σ(w) · (1 + δ(w)) — recomputed in full each
+        # round; stationary once rounds reach the DAG depth
+        def accumulate(delta: DataFrame, _k: int) -> DataFrame:
             dw = delta.select(
                 "source", F.col("vertex").alias("dst"), F.col("delta").alias("delta_w")
             )
             contrib = (
                 dag_r.join(dw, ["source", "dst"])
                 .groupBy("source", F.col("src").alias("vertex"))
-                .agg(
-                    F.sum(F.col("ratio") * (F.lit(1.0) + F.col("delta_w"))).alias("d")
-                )
+                .agg(F.sum(F.col("ratio") * (F.lit(1.0) + F.col("delta_w"))).alias("d"))
             )
-            delta = (
+            return (
                 sv.select("source", "vertex")
                 .join(contrib, ["source", "vertex"], "left")
-                .select(
-                    "source", "vertex", F.coalesce("d", F.lit(0.0)).alias("delta")
-                )
-                .localCheckpoint(eager=True).transform(guard_stats)
+                .select("source", "vertex", F.coalesce("d", F.lit(0.0)).alias("delta"))
             )
-            total_steps += 1
-        dag_r.unpersist()
 
-        batch_bc = (
-            delta.where(F.col("vertex") != F.col("source"))
-            .groupBy("vertex")
-            .agg(F.sum("delta").alias("bc"))
+        bwd = superstep_loop(
+            spark,
+            sv.select("source", "vertex", F.lit(0.0).alias("delta")),
+            accumulate,
+            algo="brandes_weighted_delta",
+            max_supersteps=min(max(depth[0] - 1, 0), max_hops),
         )
-        bc_acc = (
-            batch_bc
-            if bc_acc is None
-            else bc_acc.unionByName(batch_bc)
-            .groupBy("vertex")
-            .agg(F.sum("bc").alias("bc"))
-        ).localCheckpoint(eager=True).transform(guard_stats)
+        dag_r.unpersist()
         dag.unpersist()
+        return bwd.state, fwd.supersteps + bwd.supersteps, traversed
 
-    scale = 1.0 if directed else 0.5
-    if estimate:
-        scale *= vertices.count() / max(n_sources, 1)
-    bc = vertices.join(bc_acc, "vertex", "left").select(
-        "vertex",
-        (F.coalesce(F.col("bc"), F.lit(0.0)) * F.lit(scale)).alias("bc"),
-    )
+    res = _brandes_over_batches(spark, e, sources, batch_size, directed, estimate, run_batch)
     e.unpersist()
-    vertices.unpersist()
-    return BetweennessResult(
-        bc=bc,
-        supersteps=total_steps,
-        edges_traversed=total_edges_traversed,
-        wall_s=time.monotonic() - t0,
-    )
+    return res
 
 
 # ---------------------------------------------------------------------------
@@ -454,7 +407,7 @@ def prepare_csr_weighted(
         checked, F.count_if((w <= 0) | (w != w.cast("long"))).alias("bad")
     )
     art, default_sources = write_csr_artifact(
-        spark, _weighted_pairs(raw, directed), artifact_dir, weighted=True
+        spark, _weighted_pairs(_long_weights(raw), directed), artifact_dir, weighted=True
     )
     if checked.get["bad"]:
         art.cleanup()

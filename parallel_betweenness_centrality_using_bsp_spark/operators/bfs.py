@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import _traversal_pairs
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import traversal_edges
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
@@ -187,10 +188,7 @@ def double_sweep_diameter(
     only driver-side values are two scalar vertex ids.
     """
     if start is None:
-        both = edges.select(F.col("src").alias("v")).unionByName(
-            edges.select(F.col("dst").alias("v"))
-        )
-        start = both.agg(F.min("v")).first()[0]
+        start = endpoints(edges).agg(F.min("vertex")).first()[0]
     d1 = bfs_distances(
         spark, edges, [int(start)], directed=directed, num_partitions=num_partitions
     )
@@ -209,12 +207,7 @@ def _closeness(d: DataFrame, edges: DataFrame, wf_improved: bool) -> DataFrame:
     """``(vertex, reached, closeness)`` from the ``(source, vertex, dist)``
     distances ``d`` over the graph ``edges``: reached/Σdist per vertex,
     scaled by reached/(n - 1) when ``wf_improved`` (Wasserman-Faust)."""
-    n = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .distinct()
-        .count()
-    )
+    n = endpoints(edges).distinct().count()
     agg = d.where(F.col("dist") > 0).groupBy("vertex").agg(
         F.count(F.lit(1)).alias("reached"),
         F.sum("dist").alias("_s"),

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import SuperstepRun, superstep_loop
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
@@ -208,8 +209,7 @@ def _star_contraction(
     is the fixpoint, not a cycle)."""
     p = num_partitions or spark.sparkContext.defaultParallelism
     vertices = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
+        endpoints(edges)
         .distinct()
         .repartition(p, "vertex")
         .persist()
@@ -335,8 +335,7 @@ def incremental_components(
     )
     # delta endpoints the old labels never saw
     dverts = (
-        delta_edges.select(F.col("src").alias("vertex"))
-        .unionByName(delta_edges.select(F.col("dst").alias("vertex")))
+        endpoints(delta_edges)
         .distinct()
         .join(labels.select("vertex"), "vertex", "left_anti")
     )

@@ -162,6 +162,27 @@ def _traversal_pairs(edges: DataFrame, directed: bool) -> DataFrame:
     ).where(F.col("src") != F.col("dst"))
 
 
+def _weighted_pairs(edges: DataFrame, directed: bool) -> DataFrame:
+    """The weighted ``(src, dst, w)`` pairs a traversal follows: both
+    directions when undirected, no self-loops, and one row per pair with the
+    MINIMUM weight (only the lightest parallel edge can lie on a shortest
+    path; a heavier one kept would corrupt Brandes' sigma)."""
+    e = edges.select("src", "dst", "w")
+    if not directed:
+        e = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+    return e.where(F.col("src") != F.col("dst")).groupBy("src", "dst").agg(F.min("w").alias("w"))
+
+
+def endpoints(edges: DataFrame) -> DataFrame:
+    """``(vertex)``: both endpoints of every edge, one row per endpoint (no
+    ``distinct``, so a caller that needs each vertex once adds its own)."""
+    return edges.select(F.col("src").alias("vertex")).unionByName(
+        edges.select(F.col("dst").alias("vertex"))
+    )
+
+
 def traversal_edges(edges: DataFrame, directed: bool) -> DataFrame:
     """The (src, dst) pairs a traversal follows: the deduplicated edges when
     ``directed``, else the symmetrized view."""

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import SuperstepRun, superstep_loop
 
 
@@ -85,8 +86,7 @@ def hits(
     e_dst.count()
 
     vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .repartition(p, "vertex")
         .persist()
@@ -200,8 +200,7 @@ def salsa(
     e_dst.count()
 
     vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .repartition(p, "vertex")
         .persist()

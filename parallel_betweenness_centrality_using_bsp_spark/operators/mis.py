@@ -37,6 +37,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import symmetrize
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
@@ -53,12 +54,7 @@ def _priority(vcol, salt: str) -> "F.Column":
 
 def _vertex_priorities(e: DataFrame, salt: str) -> DataFrame:
     """(vertex, prio) for every endpoint of the symmetrized edges ``e``."""
-    return (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .select("vertex", _priority(F.col("vertex"), salt).alias("prio"))
-    )
+    return endpoints(e).distinct().select("vertex", _priority(F.col("vertex"), salt).alias("prio"))
 
 
 def _local_minima(e: DataFrame, und: DataFrame) -> DataFrame:

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
 
 
@@ -74,8 +75,7 @@ def boruvka_forest(
         .localCheckpoint(eager=True).transform(guard_stats)
     )
     labels = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .select("vertex", F.col("vertex").alias("comp"))
         .localCheckpoint(eager=True).transform(guard_stats)

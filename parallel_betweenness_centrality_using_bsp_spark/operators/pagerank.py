@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import SuperstepRun, superstep_loop
 
 
@@ -77,8 +78,7 @@ def pagerank(
     # contribution aggregate (whose exchange is also hash(vertex, p)) then
     # reuses this layout instead of re-shuffling the vertex set every step.
     vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .repartition(p, "vertex")
         .persist()
@@ -224,11 +224,7 @@ def pagerank_warm_start(
     invariant every other pagerank path maintains holds from superstep 0.
     Accepts every ``pagerank`` keyword (tol, alpha, weight_col,
     bucket_state, ...)."""
-    cur = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    cur = endpoints(edges).distinct()
     n = cur.count()
     seeded = cur.join(
         prev_ranks.select("vertex", F.col("pr").alias("_prev")), "vertex", "left"
@@ -272,8 +268,7 @@ def katz(
     p = num_partitions or spark.sparkContext.defaultParallelism
     e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
     vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .repartition(p, "vertex")
         .persist()
@@ -348,8 +343,7 @@ def eigenvector_centrality(
     p = num_partitions or spark.sparkContext.defaultParallelism
     e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
     vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
+        endpoints(e)
         .distinct()
         .repartition(p, "vertex")
         .persist()

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats, superstep_loop
 
 
@@ -57,8 +58,7 @@ def strongly_connected_components(
         .localCheckpoint(eager=True).transform(guard_stats)
     )
     verts = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionByName(edges.select(F.col("dst").alias("vertex")))
+        endpoints(edges)
         .distinct()
         .localCheckpoint(eager=True).transform(guard_stats)
     )
@@ -194,11 +194,7 @@ def dag_longest_path_layers(
     (feed the SCC condensation for arbitrary graphs) — a cycle would never
     converge, so rounds are capped and overrunning raises."""
     e = dag_edges.select("src", "dst").dropDuplicates(["src", "dst"]).localCheckpoint(eager=True).transform(guard_stats)
-    verts = vertices or (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = vertices or endpoints(e).distinct()
 
     def step(state: DataFrame, _k: int) -> DataFrame:
         msgs = (

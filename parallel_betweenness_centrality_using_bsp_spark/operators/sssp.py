@@ -40,28 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import _weighted_pairs
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import SuperstepRun, superstep_loop
-
-
-def _prepare_edges(
-    spark: SparkSession,
-    weighted_edges: DataFrame,
-    directed: bool,
-    p: int,
-) -> DataFrame:
-    e = weighted_edges.select("src", "dst", "w")
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    # parallel edges keep the MINIMUM weight (dropDuplicates would pick one
-    # arbitrarily — wrong for shortest paths)
-    return (
-        e.groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
 
 
 def sssp_run(
@@ -116,8 +96,9 @@ def sssp_run(
     computed in-plan — no extra driver round trips.
     """
     p = num_partitions or spark.sparkContext.defaultParallelism
-    e = _prepare_edges(spark, weighted_edges, directed, p)
-    e.count()
+    # min weight per pair, partitioned by src once; the first relaxation
+    # fills the cache
+    e = _weighted_pairs(weighted_edges, directed).repartition(p, "src").persist()
 
     initial = spark.createDataFrame(
         [(int(s), int(s), 0, True) for s in sources],

@@ -5,11 +5,11 @@ body materializes state: it calls ``localCheckpoint``, ``checkpoint`` or
 betweenness' ``_checkpoint``.  The scan finds every such loop in the
 package, named by its module and the top-level function that holds it.
 
-``HAND_ROLLED`` names the functions that keep their own loop today: BSP
-Brandes folds its score accumulator once per source batch (its BFS levels
-and backward phase run on the loop), weighted Brandes keeps its frontier
-loop, Boruvka runs a CC inside each round, SCC nests its loops, and
-k-means is off the graph path.  The list may only shrink.
+``HAND_ROLLED`` names the functions that keep their own loop today: both
+BSP Brandes fold their score accumulator once per source batch, in one
+batch driver (each batch's phases run on the loop), Boruvka runs a CC
+inside each round, SCC nests its loops, and k-means is off the graph
+path.  The list may only shrink.
 """
 from __future__ import annotations
 
@@ -21,8 +21,7 @@ PACKAGE = os.path.join(ROOT, "parallel_betweenness_centrality_using_bsp_spark")
 MATERIALIZE = {"localCheckpoint", "checkpoint", "_checkpoint"}
 
 HAND_ROLLED = {
-    "betweenness.betweenness_bsp",
-    "betweenness_weighted.betweenness_weighted",
+    "betweenness._brandes_over_batches",
     "mst.boruvka_forest",
     "scc.strongly_connected_components",
     "similarity.kmeans_rounds",
