@@ -42,6 +42,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
@@ -1713,11 +1715,7 @@ def graph_ppr5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.pagerank import pagerank
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     seeds = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < PPR_SEED_CAP).collect()
     )
@@ -1839,11 +1837,7 @@ def graph_bfs_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_distances
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     return bfs_distances(spark, e, sources).orderBy("source", "vertex")
 
@@ -1862,11 +1856,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.walks import random_walks
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     starts = verts.where(F.col("vertex") < WALK_START_CAP)
     return random_walks(
         spark, e, starts, walk_length=WALK_LEN, salt_buckets=8
@@ -1884,11 +1874,7 @@ def graph_skipgram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     starts = verts.where(F.col("vertex") < WALK_START_CAP)
     corpus = random_walks(spark, e, starts, walk_length=WALK_LEN, salt_buckets=8)
     return (
@@ -1907,11 +1893,7 @@ def graph_node2vec3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.walks import node2vec_walks
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     starts = verts.where(F.col("vertex") < WALK_START_CAP)
     return node2vec_walks(spark, e, starts, walk_length=3, p=4, q=2).orderBy(
         "walk_id", "pos"
@@ -2080,11 +2062,7 @@ def graph_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_distances
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     d = bfs_distances(spark, e, sources)
     return (
@@ -2301,11 +2279,7 @@ def graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import bfs_distances
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     d = bfs_distances(spark, e, sources)
     return (
@@ -2910,11 +2884,7 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _order_edges(spark, sf_dir).select(
         "src", "dst", ((F.col("src") + F.col("dst")) % 7 + 1).alias("w")
     )
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     return sssp(
         spark, e, sources, max_hops=SSSP_HOPS, early_stop=False
@@ -2939,11 +2909,7 @@ def graph_sssp_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _order_edges(spark, sf_dir).select(
         "src", "dst", ((F.col("src") + F.col("dst")) % 7 + 1).alias("w")
     )
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     return sssp(
         spark, e, sources, max_hops=200, early_stop=True, delta_width=2
@@ -3150,11 +3116,7 @@ def graph_betweenness_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     we = _weighted_order_edges(spark, sf_dir)
-    verts = (
-        we.select(F.col("src").alias("vertex"))
-        .unionByName(we.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(we).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BCW_SOURCE_CAP).collect()
     )
@@ -3183,11 +3145,7 @@ def graph_betweenness_weighted_csr(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     we = _weighted_order_edges(spark, sf_dir)
-    verts = (
-        we.select(F.col("src").alias("vertex"))
-        .unionByName(we.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(we).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BCW_SOURCE_CAP).collect()
     )
@@ -3289,11 +3247,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import betweenness_csr
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BC_SOURCE_CAP).collect()
     )
@@ -3315,11 +3269,7 @@ def graph_betweenness_bsp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import betweenness_bsp
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BC_SOURCE_CAP).collect()
     )
@@ -3341,11 +3291,7 @@ def graph_edge_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import edge_betweenness_bsp
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BC_SOURCE_CAP).collect()
     )
@@ -3361,11 +3307,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import closeness_sampled
 
     e = _order_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(e).distinct()
     sources = sorted(r["vertex"] for r in verts.where(F.col("vertex") < 8).collect())
     return (
         closeness_sampled(spark, e, sources)
@@ -3385,11 +3327,7 @@ def graph_closeness_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     we = _weighted_order_edges(spark, sf_dir)
-    verts = (
-        we.select(F.col("src").alias("vertex"))
-        .unionByName(we.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(we).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BCW_SOURCE_CAP).collect()
     )
@@ -3408,11 +3346,7 @@ def graph_harmonic_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parallel_betweenness_centrality_using_bsp_spark.operators.sssp import sssp
 
     we = _weighted_order_edges(spark, sf_dir)
-    verts = (
-        we.select(F.col("src").alias("vertex"))
-        .unionByName(we.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+    verts = endpoints(we).distinct()
     sources = sorted(
         r["vertex"] for r in verts.where(F.col("vertex") < BCW_SOURCE_CAP).collect()
     )

@@ -25,6 +25,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints  # noqa: E402
+
 
 def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(description="link-graph engine job runner")
@@ -207,8 +209,7 @@ def main(argv: list[str] | None = None) -> None:
         from parallel_betweenness_centrality_using_bsp_spark.operators.walks import random_walks_run
 
         starts = (
-            e.select(F.col("src").alias("vertex"))
-            .unionByName(e.select(F.col("dst").alias("vertex")))
+            endpoints(e)
             .distinct()
             .where(F.col("vertex") < args.sources)
         )
@@ -272,8 +273,7 @@ def main(argv: list[str] | None = None) -> None:
         from parallel_betweenness_centrality_using_bsp_spark.operators.walks import node2vec_walks_run
 
         starts = (
-            e.select(F.col("src").alias("vertex"))
-            .unionByName(e.select(F.col("dst").alias("vertex")))
+            endpoints(e)
             .distinct()
             .where(F.col("vertex") < args.sources)
         )

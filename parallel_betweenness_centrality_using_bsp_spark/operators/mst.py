@@ -15,18 +15,23 @@ how the DuckDB twin replays the run round for round.  With all-distinct
 weights this equals the unique MST/MSF; with ties it is still a valid
 minimum spanning forest (exchange argument), just a pinned one.
 
-Per round, all hash ops on the (shrinking) cross-component edge set:
+The loop's state is the labelled cross-component edge set
+(src, dst, w, cu, cv): each edge with both endpoints' component labels,
+only edges whose labels differ.  At the start every vertex is its own
+component (cu = src, cv = dst), so every edge is a cross edge.  One
+superstep:
 
-1. annotate edges with both endpoints' component labels (two joins
-   against the n-row label table), drop intra-component edges — the edge
-   set only ever SHRINKS, the classic Borůvka filter;
-2. per component: min (w, src, dst) over its incident cross edges — one
-   map-side-combined aggregation after a 2× unpivot;
-3. merge: the selected edges form a graph ON COMPONENTS (≤ one out-edge
+1. per component: min (w, src, dst) over its incident cross edges — one
+   map-side-combined aggregation after a 2× unpivot on cu / cv;
+2. merge: the selected edges form a graph ON COMPONENTS (≤ one out-edge
    per component); new labels come from the engine's own
    ``connected_components(algorithm="starcontract")`` on that contracted
    graph — O(log n) inner rounds even on adversarial selection chains,
-   and min-member-id labels keep the canonical form the oracle expects.
+   and min-member-id labels keep the canonical form the oracle expects;
+3. relabel cu / cv through that component-sized mapping and keep the
+   edges whose labels still differ.  Labels only ever merge, so the edge
+   set only ever SHRINKS (the classic Borůvka filter), and a selected
+   edge drops out by itself because its endpoints merge.
 
 The contracted component graph has at most #components edges — it
 shrinks geometrically, so the merge step's cost is dominated by round 1
@@ -36,11 +41,13 @@ edges partition across its component's aggregation like any other).
 
 from __future__ import annotations
 
+import sys
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
-
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _observed_rows
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import superstep_loop
 
 
 def boruvka_forest(
@@ -62,7 +69,7 @@ def boruvka_forest(
     )
 
     p = num_partitions or spark.sparkContext.defaultParallelism
-    e = (
+    e, obs = _observed_rows(
         edges.select(
             F.least("src", "dst").alias("src"),
             F.greatest("src", "dst").alias("dst"),
@@ -72,79 +79,44 @@ def boruvka_forest(
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))  # parallel edges: keep the lightest
         .repartition(p, "src")
-        .localCheckpoint(eager=True).transform(guard_stats)
+        .select("src", "dst", "w", F.col("src").alias("cu"), F.col("dst").alias("cv"))
     )
-    labels = (
-        endpoints(e)
-        .distinct()
-        .select("vertex", F.col("vertex").alias("comp"))
-        .localCheckpoint(eager=True).transform(guard_stats)
-    )
-
     chosen: list[DataFrame] = []
-    k = 0
-    while rounds is None or k < rounds:
-        k += 1
-        ec = (
-            e.join(
-                labels.select(F.col("vertex").alias("src"), F.col("comp").alias("cu")),
-                "src",
-            )
-            .join(
-                labels.select(F.col("vertex").alias("dst"), F.col("comp").alias("cv")),
-                "dst",
-            )
-            .where(F.col("cu") != F.col("cv"))
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        if ec.isEmpty():
-            break
-        cand = ec.select(F.col("cu").alias("comp"), "w", "src", "dst").unionByName(
-            ec.select(F.col("cv").alias("comp"), "w", "src", "dst")
-        )
+    left: list[int] = []  # cross edges after each round, seen on its barrier
+
+    def stop(_, n: int) -> bool:
+        left.append(n)
+        return n == 0
+
+    def merge(ec: DataFrame, k: int) -> DataFrame:
+        if (left[-1] if left else obs.get["rows"]) == 0:
+            return ec  # an empty edge set has no component to merge
+        pick = F.struct("w", "src", "dst", "cu", "cv")  # (src, dst) fixes (cu, cv)
         sel = (
-            cand.groupBy("comp")
-            .agg(F.min(F.struct("w", "src", "dst")).alias("m"))
-            .select("m.src", "m.dst", "m.w")
+            ec.select(F.col("cu").alias("comp"), pick.alias("m"))
+            .unionByName(ec.select(F.col("cv").alias("comp"), pick.alias("m")))
+            .groupBy("comp")
+            .agg(F.min("m").alias("m"))
+            .select("m.*")
             .distinct()  # an edge minimal for BOTH endpoints' components
-            .localCheckpoint(eager=True).transform(guard_stats)
         )
         chosen.append(sel.select("src", "dst", "w", F.lit(k).alias("round")))
-
-        comp_edges = (
-            sel.join(
-                labels.select(F.col("vertex").alias("src"), F.col("comp").alias("cu")),
-                "src",
-            )
-            .join(
-                labels.select(F.col("vertex").alias("dst"), F.col("comp").alias("cv")),
-                "dst",
-            )
-            .select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
-        )
         merged = connected_components(
-            spark, comp_edges, algorithm="starcontract"
+            spark, sel.select(F.col("cu").alias("src"), F.col("cv").alias("dst")),
+            algorithm="starcontract",
         ).state  # (vertex=old comp, label=new comp, min member id)
-        labels = (
-            labels.join(
-                merged.select(F.col("vertex").alias("comp"), "label"), "comp", "left"
-            )
-            .select(
-                "vertex", F.coalesce(F.col("label"), F.col("comp")).alias("comp")
-            )
-            .localCheckpoint(eager=True).transform(guard_stats)
-        )
-        # the forest edge set keeps only still-relevant cross edges
-        e = (
-            ec.select("src", "dst", "w")
-            .join(sel.select("src", "dst"), ["src", "dst"], "left_anti")
-            .repartition(p, "src")
-            .localCheckpoint(eager=True).transform(guard_stats)
+        return (
+            ec.join(merged.select(F.col("vertex").alias("cu"), F.col("label").alias("nu")), "cu", "left")
+            .join(merged.select(F.col("vertex").alias("cv"), F.col("label").alias("nv")), "cv", "left")
+            .select("src", "dst", "w", F.coalesce("nu", "cu").alias("cu"), F.coalesce("nv", "cv").alias("cv"))
+            .where(F.col("cu") != F.col("cv"))
         )
 
-    out = None
-    for c in chosen:
-        out = c if out is None else out.unionByName(c)
-    if out is None:
+    superstep_loop(
+        spark, e, merge, algo="boruvka",
+        max_supersteps=sys.maxsize if rounds is None else rounds,
+        converge_on=F.count(F.lit(1)), converged_fn=stop,
+    )
+    if not chosen:
         return spark.createDataFrame([], "src long, dst long, w long, round int")
-    return out
+    return reduce(DataFrame.unionByName, chosen)

@@ -1,20 +1,21 @@
 """Strongly connected components — the coloring (Orzan) algorithm as
 nested BSP loops, the directed-graph sibling of connected components.
 
-Outer round (on the still-unassigned subgraph):
+Outer superstep (state ``(vertex, scc)``, scc null while unassigned; on
+the still-unassigned subgraph):
 
-  1. **Color propagation** (inner BSP loop): ``color(v)`` starts as ``v``
+  1. **Color propagation** (inner loop run): ``color(v)`` starts as ``v``
      and takes the max over itself and its in-neighbors' colors until the
      fixpoint — after it, ``color(v) = max(ancestors(v) ∪ {v})``.  This is
      the hash-max twin of the components kernel: one frontier-driven join +
      max-aggregation per superstep, only CHANGED colors propagate.
   2. **Pivots**: vertices with ``color(v) == v`` (no larger ancestor).
-  3. **Backward reach** (inner BSP loop): from each pivot c, BFS along
+  3. **Backward reach** (inner loop run): from each pivot c, BFS along
      REVERSED edges restricted to color-class c.  Every reached vertex is
      in the SCC of c (it reaches c forward via the color certificate, and
      c reaches it backward) — all pivot classes expand in parallel in one
      joint frontier keyed by color.
-  4. Assign those SCCs, induce the remaining subgraph, repeat.
+  4. Label those SCCs into the state, peel their edges, repeat.
 
 Each outer round assigns ≥1 SCC per color class containing a pivot.
 Colors are (xxhash64(vertex), vertex) PAIRS, max-compared
@@ -27,16 +28,49 @@ depends on hash collisions.  SCC labels are still canonicalized to the
 MINIMUM member id afterwards, so output is engine-independent and
 identical to the unpermuted algorithm's.
 
-All inner loops materialize per superstep (localCheckpoint) and move only
-frontier-sized deltas; edges for the round are partitioned once.
+Each loop's barrier is its superstep's only checkpoint; the inner loops
+move only frontier-sized deltas over the round's persisted edge set.
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from parallel_betweenness_centrality_using_bsp_spark.operators.bfs import _observed_rows
 from parallel_betweenness_centrality_using_bsp_spark.operators.edges import endpoints
 from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats, superstep_loop
+
+
+def _propagate(color: DataFrame, e: DataFrame) -> DataFrame:
+    """One max-color superstep: changed colors push along out-edges."""
+    msgs = (
+        color.where("_chg")
+        .join(e, F.col("vertex") == e.src)
+        .groupBy(e.dst.alias("vertex"))
+        .agg(F.max("color").alias("cand"))
+    )
+    return color.join(msgs, "vertex", "left").select(
+        "vertex",
+        F.greatest("color", "cand").alias("color"),
+        F.coalesce(F.col("cand") > F.col("color"), F.lit(False)).alias("_chg"),
+    )
+
+
+def _reach(members: DataFrame, colored_e: DataFrame) -> DataFrame:
+    """One backward-reach superstep along reversed same-color edges."""
+    f = members.where("_new")
+    msgs = f.join(
+        colored_e,
+        (f.vertex == colored_e.r_src) & (f.color == colored_e.color),
+    ).select(F.col("r_dst").alias("vertex"), colored_e.color, F.lit(True).alias("_new"))
+    return (
+        members.select("vertex", "color", F.lit(False).alias("_new"))
+        .unionByName(msgs)
+        .groupBy("vertex", "color")
+        .agg(F.min("_new").alias("_new"))
+    )
 
 
 def strongly_connected_components(
@@ -50,62 +84,47 @@ def strongly_connected_components(
     vertex's strongly connected component.  Vertices are the src ∪ dst of
     the directed edge set; self-loops and parallel edges are tolerated."""
     p = num_partitions or spark.sparkContext.defaultParallelism
-    e_all = (
+    rounds_e = [  # the current round's edge set last
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .repartition(p, "src")
-        .localCheckpoint(eager=True).transform(guard_stats)
+        .persist()
+    ]
+    verts, obs = _observed_rows(
+        endpoints(edges).distinct().select("vertex", F.lit(None).cast("long").alias("scc"))
     )
-    verts = (
-        endpoints(edges)
-        .distinct()
-        .localCheckpoint(eager=True).transform(guard_stats)
-    )
+    left: list[int] = []  # unassigned vertices after each round
 
-    assigned = spark.createDataFrame([], "vertex long, scc long")
-    remaining = verts
-    e = e_all
+    def stop(_, n: int) -> bool:
+        left.append(n)
+        return n == 0
 
-    for _ in range(max_outer_rounds):
-        if remaining.isEmpty():
-            break
-
+    def peel(state: DataFrame, _k: int) -> DataFrame:
+        if (left[-1] if left else obs.get["rows"]) == 0:
+            return state  # nothing left to assign
+        e = rounds_e[-1]
         # -- 1. forward max-color propagation to fixpoint ------------------
         # color = struct(h = xxhash64(vertex), v = vertex): max over the
         # struct is lexicographic, so propagation order follows the HASH
         # (adversarial id orderings vanish) while the v field keeps every
         # color unique (no correctness-by-luck on 64-bit collisions).
-        color = remaining.select(
-            "vertex",
-            F.struct(
-                F.xxhash64(F.col("vertex")).alias("h"),
-                F.col("vertex").alias("v"),
-            ).alias("color"),
-        )
-        color = color.localCheckpoint(eager=True).transform(guard_stats)
-        frontier = color  # rows whose color changed last superstep
-        while True:
-            msgs = (
-                frontier.join(e, frontier.vertex == e.src)
-                .select(e.dst.alias("vertex"), "color")
-                .groupBy("vertex")
-                .agg(F.max("color").alias("cand"))
-            )
-            c, m = color.alias("c"), msgs.alias("m")
-            merged = (
-                c.join(m, "vertex", "left")
-                .select(
-                    "vertex",
-                    F.greatest(F.col("c.color"), F.col("m.cand")).alias("color"),
-                    (F.col("m.cand") > F.col("c.color")).alias("_chg"),
-                )
-                .localCheckpoint(eager=True).transform(guard_stats)
-            )
-            frontier = merged.where(F.col("_chg")).select("vertex", "color")
-            color = merged.select("vertex", "color")
-            if merged.where(F.col("_chg")).isEmpty():
-                break
+        color = superstep_loop(
+            spark,
+            state.where(F.col("scc").isNull()).select(
+                "vertex",
+                F.struct(F.xxhash64("vertex").alias("h"), F.col("vertex").alias("v")).alias("color"),
+                F.lit(True).alias("_chg"),
+            ),
+            lambda c, _k: _propagate(c, e),
+            algo="scc_color",
+            max_supersteps=sys.maxsize,
+            converge_on=F.count_if("_chg"),
+            converged_fn=lambda _prev, n: n == 0,
+        ).state.drop("_chg")
+        for old in rounds_e[:-1]:  # e is filled now: its parent can go
+            old.unpersist()
+        del rounds_e[:-1]
 
         # -- 2/3. backward reach from pivots within each color class -------
         # member (vertex, color); pivot classes expand along reversed edges
@@ -115,54 +134,57 @@ def strongly_connected_components(
             .join(color.withColumnRenamed("vertex", "dst").withColumnRenamed("color", "dc"), "dst")
             .where(F.col("sc") == F.col("dc"))
             .select(F.col("dst").alias("r_src"), F.col("src").alias("r_dst"), F.col("sc").alias("color"))
-            .localCheckpoint(eager=True).transform(guard_stats)
+            .persist()
         )
-        scc_members = color.where(F.col("vertex") == F.col("color.v")).select(
-            "vertex", "color"
-        ).localCheckpoint(eager=True).transform(guard_stats)
-        frontier = scc_members
-        while not frontier.isEmpty():
-            nxt = (
-                frontier.join(
-                    colored_e,
-                    (frontier.vertex == colored_e.r_src)
-                    & (frontier.color == colored_e.color),
-                )
-                .select(F.col("r_dst").alias("vertex"), colored_e.color.alias("color"))
-                .distinct()
-                .join(scc_members, ["vertex", "color"], "left_anti")
-                .localCheckpoint(eager=True).transform(guard_stats)
-            )
-            frontier = nxt
-            if not nxt.isEmpty():
-                scc_members = scc_members.unionByName(nxt).localCheckpoint(eager=True).transform(guard_stats)
+        try:
+            members = superstep_loop(
+                spark,
+                color.where(F.col("vertex") == F.col("color.v")).select(
+                    "vertex", "color", F.lit(True).alias("_new")
+                ),
+                lambda m, _k: _reach(m, colored_e),
+                algo="scc_reach",
+                max_supersteps=sys.maxsize,
+                converge_on=F.count_if("_new"),
+                converged_fn=lambda _prev, n: n == 0,
+            ).state
+        finally:
+            colored_e.unpersist()
 
         # -- 4. canonicalize labels, peel, induce the rest -----------------
         labels = (
-            scc_members.groupBy("color")
-            .agg(F.min("vertex").alias("scc"))
-            .join(scc_members, "color")
-            .select("vertex", "scc")
+            members.groupBy("color")
+            .agg(F.min("vertex").alias("_scc"))
+            .join(members, "color")
+            .select("vertex", "_scc")
         )
-        assigned = assigned.unionByName(labels).localCheckpoint(eager=True).transform(guard_stats)
-        remaining = remaining.join(labels.select("vertex"), "vertex", "left_anti").localCheckpoint(eager=True).transform(guard_stats)
-        e = (
+        rounds_e.append(
             e.join(labels.select(F.col("vertex").alias("src")), "src", "left_anti")
             .join(labels.select(F.col("vertex").alias("dst")), "dst", "left_anti")
-            .localCheckpoint(eager=True).transform(guard_stats)
+            .persist()
         )
-    else:
-        n_left = remaining.count()
-        if n_left:
-            # Partial labels would silently masquerade as complete output.
-            raise ValueError(
-                f"strongly_connected_components did not assign {n_left} "
-                f"vertices within max_outer_rounds={max_outer_rounds} — "
-                "raise the cap (hash-randomized colors make this "
-                "vanishingly unlikely on non-degenerate graphs)"
-            )
+        return state.join(labels, "vertex", "left").select(
+            "vertex", F.coalesce("scc", "_scc").alias("scc")
+        )
 
-    return assigned
+    try:
+        run = superstep_loop(
+            spark, verts, peel, algo="scc", max_supersteps=max_outer_rounds,
+            converge_on=F.count_if(F.col("scc").isNull()), converged_fn=stop,
+        )
+    finally:
+        for e in rounds_e:
+            e.unpersist()
+    n_left = left[-1] if left else obs.get["rows"]
+    if not run.converged and n_left:
+        # Partial labels would silently masquerade as complete output.
+        raise ValueError(
+            f"strongly_connected_components did not assign {n_left} "
+            f"vertices within max_outer_rounds={max_outer_rounds} — "
+            "raise the cap (hash-randomized colors make this "
+            "vanishingly unlikely on non-degenerate graphs)"
+        )
+    return run.state
 
 
 def condense(spark: SparkSession, edges: DataFrame, labels: DataFrame) -> DataFrame:

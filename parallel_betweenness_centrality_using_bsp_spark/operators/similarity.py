@@ -22,7 +22,7 @@ from pyspark.sql.functions import pandas_udf
 
 from parallel_betweenness_centrality_using_bsp_spark.functions.vectors import cosine
 from parallel_betweenness_centrality_using_bsp_spark.operators.dedup import DEFAULT_MAX_BUCKET_SIZE
-from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats
+from parallel_betweenness_centrality_using_bsp_spark.plans.superstep import guard_stats, superstep_loop
 
 
 def brute_force_topk(
@@ -434,6 +434,9 @@ def kmeans_rounds(
     so ulp-level summation-order noise can never flip an assignment and a
     depth-unrolled SQL twin replays the run exactly.
 
+    Rounds run on ``superstep_loop`` with the assignment as the state: each
+    superstep takes the cluster means from it, then reassigns.
+
     Plan shape per round: the k×dim centroid relation (small BY
     DEFINITION) broadcasts into the position-exploded vector table —
     (n·dim) × k multiply-accumulate rows reduced by ONE hash aggregation
@@ -468,11 +471,8 @@ def kmeans_rounds(
         raise ValueError(
             f"kmeans_rounds: k={k} but only {len(seed_ids)} distinct vectors"
         )
-    cent = ex.where(F.col("vec_id").isin(seed_ids)).select(
-        F.col("vec_id").alias("cid"), "pos", F.round("val", 6).alias("cval")
-    )
-    asg = None
-    for r in range(rounds):
+
+    def assign(cent: DataFrame) -> DataFrame:
         d2 = (
             ex.join(F.broadcast(cent), "pos")
             .groupBy("vec_id", "cid")
@@ -484,14 +484,18 @@ def kmeans_rounds(
             )
         )
         best = d2.groupBy("vec_id").agg(F.min(F.struct("d2", "cid")).alias("_m"))
-        asg = best.select(
-            "vec_id", F.col("_m.cid").alias("cluster"), F.col("_m.d2").alias("d2")
+        return best.select("vec_id", F.col("_m.cid").alias("cluster"), F.col("_m.d2").alias("d2"))
+
+    def update(asg: DataFrame, _k: int) -> DataFrame:
+        return assign(
+            ex.join(asg.select("vec_id", F.col("cluster").alias("cid")), "vec_id")
+            .groupBy("cid", "pos")
+            .agg(F.round(F.avg("val"), 6).alias("cval"))
         )
-        if r < rounds - 1:
-            asg = asg.localCheckpoint(eager=True).transform(guard_stats)
-            cent = (
-                ex.join(asg.select("vec_id", F.col("cluster").alias("cid")), "vec_id")
-                .groupBy("cid", "pos")
-                .agg(F.round(F.avg("val"), 6).alias("cval"))
-            )
-    return asg
+
+    seeds = ex.where(F.col("vec_id").isin(seed_ids)).select(
+        F.col("vec_id").alias("cid"), "pos", F.round("val", 6).alias("cval")
+    )
+    return superstep_loop(
+        spark, assign(seeds), update, algo="kmeans", max_supersteps=rounds - 1
+    ).state

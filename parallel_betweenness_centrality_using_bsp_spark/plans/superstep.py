@@ -13,9 +13,9 @@ HITS, SALSA, SimRank, SSSP, k-core, coreness, k-truss, WL refinement,
 random walks (uniform and node2vec), k-hop feature means, Luby MIS,
 Jones-Plassmann coloring, greedy matching, ANF sketches, DAG
 longest-path layers, BFS levels and BSP Brandes' backward phase (steps
-that record every level they are handed), and both phases of weighted
-Brandes.  Not on it: Boruvka MST, whose rounds each run a CC; SCC, whose
-loops nest; k-means.
+that record every level they are handed), both phases of weighted
+Brandes, Borůvka MSF (a step that runs a CC), SCC (an outer peel loop
+whose step runs two inner loops) and k-means.
 
 * **Lineage control** — iterative DataFrame loops grow the logical plan
   without bound; every superstep either writes state to parquet and reads it

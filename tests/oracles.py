@@ -4,6 +4,7 @@ SURVEY.md §5, FIXTURES.md §B4)."""
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 import networkx as nx
 import numpy as np
@@ -199,3 +200,24 @@ def assert_scores_close(got: dict, want: dict, atol=1e-6):
     assert np.allclose(g, w, atol=atol), (
         f"max abs diff {np.abs(g - w).max()}"
     )
+
+
+def _job_ids(spark, action):
+    """(result, ids of the Spark jobs) of ``action()``, found through a job
+    group and the status tracker."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_run(spark, action):
+    """(result, number of Spark jobs) of ``action()``."""
+    out, ids = _job_ids(spark, action)
+    return out, len(ids)

@@ -1,5 +1,3 @@
-import uuid
-
 import numpy as np
 
 from parallel_betweenness_centrality_using_bsp_spark.operators.betweenness import (
@@ -14,6 +12,8 @@ from parallel_betweenness_centrality_using_bsp_spark.sources.graphs import (
 )
 
 from tests.oracles import (
+    _job_ids,
+    _jobs_run,
     assert_scores_close,
     ba_graph,
     df_to_dict,
@@ -100,27 +100,6 @@ def test_bsp_deeper_than_the_visited_fold(spark):
     assert_scores_close(df_to_dict(res.bc, "vertex", "bc"), want)
     assert res.supersteps == 39
     assert res.edges_traversed == 760
-
-
-def _job_ids(spark, action):
-    """(result, ids of the Spark jobs) of ``action()``, found through a job
-    group and the status tracker."""
-    sc = spark.sparkContext
-    group = f"test-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc._jsc.clearJobGroup()
-    # job events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
-def _jobs_run(spark, action):
-    """(result, number of Spark jobs) of ``action()``."""
-    out, ids = _job_ids(spark, action)
-    return out, len(ids)
 
 
 def _stage_tasks(spark, job_ids) -> list[int]:

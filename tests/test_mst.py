@@ -86,3 +86,27 @@ def test_boruvka_round_cap_is_prefix_of_full_run(spark):
     }
     assert part == {e: k for e, k in full.items() if k == 1}
     assert max(full.values()) >= 2  # the cap actually cut something
+
+
+def test_boruvka_job_budget(spark):
+    """One barrier job wave per round plus the round's CC, with no label
+    table and no per-round emptiness job: the pinned graph stays within its
+    measured job count (135-137 with the hand-rolled loop)."""
+    from tests.oracles import _jobs_run, ba_graph
+
+    we = _wedges(ba_graph(n=70, m=3, seed=37))
+    rows, jobs = _jobs_run(spark, lambda: boruvka_forest(spark, _df(spark, we)).collect())
+    assert {(r["src"], r["dst"]) for r in rows} == _nx_msf(we)
+    assert jobs <= 96, jobs
+
+
+def test_boruvka_empty_input(spark):
+    from tests.oracles import _jobs_run
+
+    out, call_jobs = _jobs_run(spark, lambda: boruvka_forest(spark, _df(spark, [])))
+    rows, collect_jobs = _jobs_run(spark, out.collect)
+    assert rows == []
+    assert call_jobs + collect_jobs <= 6, (call_jobs, collect_jobs)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("src", "bigint"), ("dst", "bigint"), ("w", "bigint"), ("round", "int"),
+    ]

@@ -5,11 +5,10 @@ body materializes state: it calls ``localCheckpoint``, ``checkpoint`` or
 betweenness' ``_checkpoint``.  The scan finds every such loop in the
 package, named by its module and the top-level function that holds it.
 
-``HAND_ROLLED`` names the functions that keep their own loop today: both
-BSP Brandes fold their score accumulator once per source batch, in one
-batch driver (each batch's phases run on the loop), Boruvka runs a CC
-inside each round, SCC nests its loops, and k-means is off the graph
-path.  The list may only shrink.
+``HAND_ROLLED`` names the functions that keep their own loop today: only
+the one source-batch driver of both BSP Brandes, which folds its score
+accumulator once per source batch (each batch's phases run on the loop).
+The list may only shrink.
 """
 from __future__ import annotations
 
@@ -20,12 +19,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "parallel_betweenness_centrality_using_bsp_spark")
 MATERIALIZE = {"localCheckpoint", "checkpoint", "_checkpoint"}
 
-HAND_ROLLED = {
-    "betweenness._brandes_over_batches",
-    "mst.boruvka_forest",
-    "scc.strongly_connected_components",
-    "similarity.kmeans_rounds",
-}
+HAND_ROLLED = {"betweenness._brandes_over_batches"}
 
 
 def _called_name(call: ast.Call) -> str | None:

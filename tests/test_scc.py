@@ -3,7 +3,7 @@ import networkx as nx
 from parallel_betweenness_centrality_using_bsp_spark.operators.scc import strongly_connected_components
 from parallel_betweenness_centrality_using_bsp_spark.sources.graphs import edge_df
 
-from tests.oracles import er_graph
+from tests.oracles import _jobs_run, er_graph
 
 
 def _want(directed_edges):
@@ -31,13 +31,39 @@ def test_scc_two_cycles_and_bridge(spark):
     assert _got(spark, e) == _want(e)
 
 
-def test_scc_er_digraph(spark):
+def _er_digraph():
     # one orientation of an ER graph plus back-edges to force nontrivial SCCs
     base = er_graph(n=50, p=0.06, seed=19)
-    e = list(base) + [(v, u) for u, v in base if (u + v) % 3 == 0]
+    return list(base) + [(v, u) for u, v in base if (u + v) % 3 == 0]
+
+
+def test_scc_er_digraph(spark):
+    e = _er_digraph()
     got, want = _got(spark, e), _want(e)
     assert got == want
     assert len(set(want.values())) > 1  # the fixture has multiple SCCs
+
+
+def test_scc_job_budget(spark):
+    """Each superstep of the outer peel loop and of its two inner loops is
+    one barrier job wave, with no per-round emptiness job: the ER fixture
+    stays within its measured job count (390-391 with hand-rolled loops)."""
+    e = _er_digraph()
+    edf = edge_df(spark, e)
+    rows, jobs = _jobs_run(
+        spark, lambda: strongly_connected_components(spark, edf).collect()
+    )
+    assert {r["vertex"]: r["scc"] for r in rows} == _want(e)
+    assert jobs <= 228, jobs
+
+
+def test_scc_empty_input(spark):
+    edf = spark.createDataFrame([], "src long, dst long")
+    out = strongly_connected_components(spark, edf)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("vertex", "bigint"), ("scc", "bigint"),
+    ]
 
 
 def test_scc_decreasing_chain_worst_case(spark):
